@@ -9,8 +9,8 @@ References into the reference repo:
 
 The CRS transform and plus-code encoding depend on libraries not present in
 this container (pyproj / openlocationcode); the plumbing (signatures, column
-shapes, batch UDF skeletons) is real and tested, the numeric kernels are
-deterministic approximations clearly marked as such.
+shapes) is real and tested, the numeric kernels are deterministic
+approximations clearly marked as such.
 """
 
 from __future__ import annotations
@@ -78,36 +78,12 @@ def itm_to_wgs84_approx(x: Column, y: Column) -> Column:
     The reference uses pyproj (not in this container). This is a first-order
     affine approximation around the projection's central meridian, accurate to
     ~hundreds of meters over Israel — good enough for bbox validation and
-    point bucketing in tests. For production accuracy swap in the pyproj
-    pandas UDF below.
+    point bucketing in tests. Production accuracy needs a pyproj transform
+    (EPSG:2039 -> EPSG:4326).
     """
     lon = (x.cast("double") - 219529.584) / 93574.0 + 35.2045169
     lat = (y.cast("double") - 626907.39) / 110979.0 + 31.734394
     return F.array(lon, lat)
-
-
-def itm_to_wgs84_pandas_udf():
-    """Arrow-batched pyproj transform; raises if pyproj is unavailable.
-
-    Returns a pandas UDF ``(x, y) -> array<double> [lon, lat]`` that converts
-    whole Arrow batches at once (vectorized inside pyproj).
-    """
-    try:
-        from pyproj import Transformer  # noqa: PLC0415
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise NotImplementedError("pyproj not available in this environment") from exc
-
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    transformer = Transformer.from_crs("EPSG:2039", "EPSG:4326", always_xy=True)
-
-    @pandas_udf("array<double>")
-    def _convert(x: pd.Series, y: pd.Series) -> pd.Series:
-        lon, lat = transformer.transform(x.values, y.values)
-        return pd.Series([[lo, la] for lo, la in zip(lon, lat)])
-
-    return _convert
 
 
 # ---------------------------------------------------------------------------

@@ -53,19 +53,6 @@ def card_score(
     return score * F.pow(F.lit(10.0), boost)
 
 
-def autocomplete_score(visit_count: Column) -> Column:
-    """(ln(v) + 1)^2 popularity score; v <= 0 or null scores 0."""
-    v = visit_count.cast("double")
-    return F.when(v.isNull() | (v <= 0), F.lit(0.0)).otherwise(
-        F.pow(F.log(v) + 1.0, 2.0)
-    )
-
-
-def bbox_area_score(bounds: Column) -> Column:
-    """Place prominence = bbox area (W,S,E,N array) — bigger place, higher score."""
-    return (bounds.getItem(2) - bounds.getItem(0)) * (bounds.getItem(3) - bounds.getItem(1))
-
-
 def idf_score_table(
     pairs: DataFrame, group_col: str, item_col: str, score_col: str = "score"
 ) -> DataFrame:

@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 # Tokenization ---------------------------------------------------------------
 
 _WS = r"\s+"
-# BPE-ish pre-tokenizer: word chars | single non-space punctuation.
-_BPE_RE = r"[\p{L}\p{N}]+|[^\p{L}\p{N}\s]"
 
 
 def tokens(text: Column) -> Column:
@@ -32,11 +30,6 @@ def token_count(text: Column) -> Column:
     return F.when(
         text.isNull() | (F.trim(text) == ""), F.lit(0)
     ).otherwise(F.size(tokens(text)))
-
-
-def bpe_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: words plus individual punctuation marks."""
-    return F.size(F.regexp_extract_all(text, F.lit(_BPE_RE), F.lit(0)))
 
 
 # Quality scoring -------------------------------------------------------------
@@ -303,12 +296,6 @@ def lang_id(text: Column) -> Column:
     )
 
 
-def hebrew_tokens(text: Column) -> Column:
-    """All Hebrew word tokens in a string (reference collects these for the
-    ES search corpus, ``operators/derive/to_es.py:142-160``)."""
-    return F.regexp_extract_all(text, F.lit(r"[֐-׿]+"), F.lit(0))
-
-
 # Fingerprinting / shingling --------------------------------------------------
 
 def normalized_text(text: Column) -> Column:
@@ -347,21 +334,6 @@ def word_shingles(text: Column, k: int = 3) -> Column:
         )
 
     return _let(tokens(normalized_text(text)), build)
-
-
-def char_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of the normalized text (normalization
-    let-bound: one pass per row, not one per gram position)."""
-
-    def build(norm: Column) -> Column:
-        length = F.length(norm)
-        starts = F.sequence(F.lit(1), F.greatest(length - (n - 1), F.lit(1)))
-        grams = F.transform(starts, lambda i: F.substr(norm, i, F.lit(n)))
-        return F.when(length == 0, F.array().cast("array<string>")).otherwise(
-            F.array_distinct(grams)
-        )
-
-    return _let(normalized_text(text), build)
 
 
 # BPE tokenization (sequential-merge variant) ---------------------------------

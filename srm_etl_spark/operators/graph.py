@@ -33,6 +33,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session_cache import keep_result, release_checkpoint
+
 
 def connected_components(
     pairs: DataFrame,
@@ -60,27 +62,10 @@ def connected_components(
     has not converged after ``max_iter`` rounds rather than returning a wrong
     labeling.
     """
-    sc = pairs.sparkSession.sparkContext
     if scheme == "star":
-        return _cc_star(pairs, left_col, right_col, max_iter, sc)
+        return _cc_star(pairs, left_col, right_col, max_iter)
     if scheme != "propagate":
         raise ValueError(f"unknown connected-components scheme: {scheme!r}")
-
-    def _ckpt(df: DataFrame):
-        """Eager localCheckpoint + the set of persistent-RDD ids it created,
-        so the round loop can free exactly its own blocks later (executor
-        storage would otherwise grow linearly with iteration count)."""
-        before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-        out = df.localCheckpoint(eager=True)
-        after = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-        return out, after - before
-
-    def _free(ids) -> None:
-        rdds = sc._jsc.getPersistentRDDs()
-        for i in ids:
-            rdd = rdds.get(i)
-            if rdd is not None:
-                rdd.unpersist(False)
 
     # symmetrize with one explode — a union of the plan with its swap would
     # execute the (possibly expensive) upstream pair-generation plan twice.
@@ -106,11 +91,14 @@ def connected_components(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # fused first round: label(v) = min(v, min neighbor) is a pure aggregate
-    # over the (symmetric) edge list — no join needed, one round saved
-    labels, labels_ids = _ckpt(
+    # over the (symmetric) edge list — no join needed, one round saved. Each
+    # round's checkpoint is released once its successor has materialized
+    # (executor storage would otherwise grow linearly with round count).
+    labels = (
         edges.groupBy("a")
         .agg(F.least(F.col("a"), F.min("b")).alias("component"))
         .select(F.col("a").alias("node"), "component")
+        .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
         # min label among each node's neighbors, this round
@@ -124,21 +112,23 @@ def connected_components(
         # rides in the checkpointed data, so each round is a single
         # materialization plus a cached-read emptiness probe — no
         # anti-join+union reshuffle, no separate improvement checkpoint
-        new_labels, new_ids = _ckpt(
-            labels.join(nbr_min, labels.node == nbr_min.a, "left").select(
+        new_labels = (
+            labels.join(nbr_min, labels.node == nbr_min.a, "left")
+            .select(
                 "node",
                 F.least("component", "nbr_min").alias("component"),
                 F.coalesce(
                     F.col("nbr_min") < F.col("component"), F.lit(False)
                 ).alias("_changed"),
             )
+            .localCheckpoint(eager=True)
         )
         converged = new_labels.filter(F.col("_changed")).isEmpty()
-        _free(labels_ids)
-        labels, labels_ids = new_labels.select("node", "component"), new_ids
+        release_checkpoint(labels)
+        labels = new_labels
         if converged:
             edges.unpersist()
-            return labels
+            return labels.select("node", "component")
     edges.unpersist()
     raise RuntimeError(
         f"connected_components: no fixpoint after {max_iter} rounds "
@@ -147,9 +137,7 @@ def connected_components(
     )
 
 
-def _cc_star(
-    pairs: DataFrame, left_col: str, right_col: str, max_iter: int, sc
-) -> DataFrame:
+def _cc_star(pairs: DataFrame, left_col: str, right_col: str, max_iter: int) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14).
 
@@ -167,19 +155,6 @@ def _cc_star(
     aggregations, not an except/anti-join.
     """
 
-    def _ckpt(df: DataFrame):
-        before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-        out = df.localCheckpoint(eager=True)
-        after = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-        return out, after - before
-
-    def _free(ids) -> None:
-        rdds = sc._jsc.getPersistentRDDs()
-        for i in ids:
-            rdd = rdds.get(i)
-            if rdd is not None:
-                rdd.unpersist(False)
-
     def canon(df: DataFrame) -> DataFrame:
         u, v = F.col("u"), F.col("v")
         return (
@@ -195,9 +170,9 @@ def _cc_star(
         ).first()
         return (row["n"], row["h"])
 
-    edges, ids = _ckpt(
-        canon(pairs.select(F.col(left_col).alias("u"), F.col(right_col).alias("v")))
-    )
+    edges = canon(
+        pairs.select(F.col(left_col).alias("u"), F.col(right_col).alias("v"))
+    ).localCheckpoint(eager=True)
     sig = signature(edges)
     for _ in range(max_iter):
         # large-star over the symmetrized neighborhood
@@ -221,10 +196,10 @@ def _cc_star(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins2.select(F.col("u"), F.col("m").alias("v")))
         )
-        new_edges, new_ids = _ckpt(canon(ss))
+        new_edges = canon(ss).localCheckpoint(eager=True)
         new_sig = signature(new_edges)
-        _free(ids)
-        edges, ids = new_edges, new_ids
+        release_checkpoint(edges)
+        edges = new_edges
         if new_sig == sig:
             # fixpoint: every edge points at its component minimum
             left_labels = edges.groupBy("u").agg(F.min("v").alias("component")).select(
@@ -243,34 +218,10 @@ def _cc_star(
     )
 
 
-# One-deep memo over the SAME discipline as operators/session_cache.py: the
-# CC loop runs eagerly at construction time (each round localCheckpoints), so
-# slot-persisting the *output* frame cannot dedupe the work — the reuse check
-# must run against the INPUT pair plan before the loop starts. Bounded to one
-# entry; a different pair plan evicts the predecessor. Like every
-# session_cache slot, this assumes inputs are immutable for the session's
-# lifetime: a same-plan re-read after the underlying files changed serves
-# the materialized result (the standard warm-cache contract).
-_CLUSTER_MEMO: list = []
-
-
-def clear_cluster_memo() -> None:
-    """Drop the memo entry and release any persisted state it pins. Call when
-    the underlying sf_dir files are rewritten in place mid-session (the
-    ``card_search(use_cache=False)`` scenario)."""
-    for _, _, out in _CLUSTER_MEMO:
-        try:
-            out.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001, S110 — session may be gone
-            pass
-    _CLUSTER_MEMO.clear()
-
-
 def duplicate_clusters(
     pairs: DataFrame,
     left_col: str = "left_id",
     right_col: str = "right_id",
-    use_cache: bool = True,
 ) -> DataFrame:
     """(node, component, cluster_size) for every clustered node.
 
@@ -281,33 +232,17 @@ def duplicate_clusters(
     Repeated resolution of a semantically identical pair plan in one session
     (the dedup report and the keep-best policy both cluster the same pair
     set) returns the already-materialized labeling instead of re-running the
-    propagation loop. ``use_cache=False`` (mirroring
-    ``card_search(use_cache=False)``) bypasses AND clears the memo — the
-    escape hatch for callers that rewrite the sf_dir files in place
-    mid-session, where a same-plan lookup would serve stale clusters.
+    propagation loop, which runs eagerly here (each round localCheckpoints),
+    so the reuse check is a ``session_cache.keep_result`` memo keyed by the
+    INPUT pair plan; ``release_all`` drops it.
     """
-    if not use_cache:
-        clear_cluster_memo()
-    if _CLUSTER_MEMO:
-        prev_pairs, prev_cols, prev_out = _CLUSTER_MEMO[0]
-        try:
-            # same-session guard: a memo bound to a stopped session would
-            # pass the pure-JVM plan comparison and crash on first action
-            if (
-                prev_pairs.sparkSession is pairs.sparkSession
-                and (left_col, right_col) == prev_cols
-                and pairs.sameSemantics(prev_pairs)
-            ):
-                return prev_out
-        except Exception:  # noqa: BLE001, S110 — prior session may be gone
-            _CLUSTER_MEMO.clear()
-    cc = connected_components(pairs, left_col, right_col)
-    sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-    out = cc.join(sizes, "component").select("node", "component", "cluster_size")
-    if use_cache:
-        clear_cluster_memo()  # evict (and unpersist) the predecessor
-        _CLUSTER_MEMO[:] = [(pairs, (left_col, right_col), out)]
-    return out
+
+    def build() -> DataFrame:
+        cc = connected_components(pairs, left_col, right_col)
+        sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
+        return cc.join(sizes, "component").select("node", "component", "cluster_size")
+
+    return keep_result(pairs, "duplicate_clusters", (left_col, right_col), build)
 
 
 def keep_best_representative(
@@ -452,7 +387,7 @@ def pagerank(
         if (i + 1) % checkpoint_every == 0 or i + 1 == iterations:
             pr = pr.localCheckpoint(eager=True)
             if prev is not None:
-                prev.unpersist(blocking=False)
+                release_checkpoint(prev)
             prev = pr
     e.unpersist(blocking=False)
     edges_w.unpersist(blocking=False)

@@ -8,50 +8,8 @@ join strategy) is left to Catalyst.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-# P8/P9 — sentinel + status filters (reference helpers.py:85-94)
-
-def filter_dummy_rows(df: DataFrame, id_col: str = "id", name_col: str | None = "name") -> DataFrame:
-    keep = F.col(id_col).isNull() | (F.col(id_col) != "dummy")
-    if name_col and name_col in df.columns:
-        keep = keep & (F.col(name_col).isNull() | (F.col(name_col) != "dummy"))
-    return df.filter(keep)
-
-
-def filter_active_rows(df: DataFrame, status_col: str = "status") -> DataFrame:
-    """Keep rows whose status is ACTIVE after trim+uppercase normalization."""
-    return df.filter(F.upper(F.trim(F.coalesce(F.col(status_col), F.lit("")))) == "ACTIVE")
-
-
-# F29 — config-driven projection builder (reference srm_tools/processors.py:5-17)
-
-def ensure_fields(df: DataFrame, mapping: dict[str, dict]) -> DataFrame:
-    """Declarative ``{target: {source?, type?, transform?}}`` projection.
-
-    - ``source``: source column (defaults to the target name; missing source
-      -> NULL column);
-    - ``type``: Spark cast applied after extraction;
-    - ``transform``: ``Callable[[Column], Column]`` applied before the cast.
-
-    The whole mapping becomes ONE select, so Catalyst sees a flat projection.
-    """
-    cols = []
-    for target, spec in mapping.items():
-        spec = spec or {}
-        source = spec.get("source", target)
-        col = F.col(source) if source in df.columns else F.lit(None)
-        transform: Callable[[Column], Column] | None = spec.get("transform")
-        if transform is not None:
-            col = transform(col)
-        if spec.get("type"):
-            col = col.cast(spec["type"])
-        cols.append(col.alias(target))
-    return df.select(*cols)
 
 
 # U1 — union with column mapping/coalescing (reference to_es.py:193-196)
@@ -77,40 +35,6 @@ def unwind(df: DataFrame, from_col: str, to_col: str | None = None, allow_empty:
     if to_col == from_col:
         exploded = exploded.drop(from_col)
     return exploded.withColumnRenamed("__unwound", to_col)
-
-
-# J4 — join with set-aggregation of the many side (reference to_dp.py:511-519)
-
-def join_aggregate_set(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    value_col: str,
-    out_col: str,
-    how: str = "left",
-) -> DataFrame:
-    """Collapse source rows per key into a sorted distinct array, then join.
-
-    Aggregating BEFORE the join keeps the shuffle at |distinct keys| rather
-    than fanning out the target, and the sorted array makes output
-    deterministic.
-    """
-    collapsed = source.groupBy(*keys).agg(
-        F.array_sort(F.collect_set(value_col)).alias(out_col)
-    )
-    return target.join(collapsed, keys, how)
-
-
-# J6 — broadcast dimension lookup (reference driver-side dict joins)
-
-def broadcast_lookup(
-    target: DataFrame,
-    dim: DataFrame,
-    keys: list[str],
-    how: str = "left",
-) -> DataFrame:
-    """Left-enrich from a small dimension with an explicit broadcast hint."""
-    return target.join(F.broadcast(dim), keys, how)
 
 
 # J7/J9 — similarity join with blocking (reference fuzzy joins)

@@ -10,6 +10,11 @@ packed-doc table of the bitmap similarity join): each named slot holds at most
 one persisted frame per session; a new frame with identical semantics reuses
 the warm cache, a different one evicts the predecessor. Storage accumulation
 is bounded to one frame per slot.
+
+The module also owns every release: :func:`release_checkpoint` frees one
+checkpoint's blocks (the iterative graph operators call it per round),
+:func:`keep_result` memoizes operators that train eagerly, and
+:func:`release_all` is the one reset for all of it.
 """
 
 from __future__ import annotations
@@ -39,23 +44,31 @@ _POOLS: dict[str, dict[int, DataFrame]] = {}
 _CKPT_POOLS: dict[str, dict[int, tuple[DataFrame, DataFrame]]] = {}
 
 
-def _unpersist_ckpt_blocks(ckpt: DataFrame) -> None:
+# Plan-keyed results of operators whose expensive work runs EAGERLY at
+# construction (the connected-components loop, Lloyd's driver syncs), so a
+# persist of their lazy output could not dedupe it: slot -> (key frame,
+# params, result). One entry per slot; release_all drops them all.
+_RESULTS: dict[str, tuple[DataFrame, tuple, object]] = {}
+
+
+def release_checkpoint(ckpt: DataFrame) -> None:
     """Deterministically free a localCheckpoint'ed frame's executor blocks.
 
     Dropping the Python reference alone leaves reclamation to py4j
     finalization + JVM GC + ContextCleaner — nondeterministic, so executor
-    storage could still hold a released pin's blocks while the next bench
-    query is measured (release_all exists for exactly that isolation). The
-    checkpointed frame's analyzed plan is a LogicalRDD over the materialized
-    block RDD; unpersist it directly. The frame is DEAD afterwards (truncated
-    lineage cannot recompute) — only call where the contract guarantees no
-    consumer is pending. Best-effort: a torn-down session, a RELIABLE
-    checkpoint (file-backed, nothing to unpersist) or a plan shape that is
-    not a bare LogicalRDD all just fall through to the GC path."""
+    storage could still hold a released pin's blocks while the next query
+    is measured, and an iterative loop would accumulate one checkpoint per
+    round. The checkpointed frame's analyzed plan is a LogicalRDD over the
+    materialized block RDD; unpersist it directly (``DataFrame.unpersist``
+    is a no-op here: the blocks live outside the CacheManager). The frame is
+    DEAD afterwards (truncated lineage cannot recompute) — only call where
+    no consumer is pending. A RELIABLE checkpoint (file-backed) has nothing
+    to unpersist and passes through; a failure is logged and leaves the
+    blocks to the GC path."""
     try:
         ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001, S110 — GC path remains correct
-        pass
+    except Exception:  # noqa: BLE001 — GC path remains correct
+        _log.warning("session_cache: could not release checkpoint blocks", exc_info=True)
 
 
 def _reliable_checkpoint_dir(spark) -> str | None:
@@ -98,8 +111,10 @@ def checkpoint_pool_originals() -> list[tuple[str, DataFrame]]:
 
 
 def release_all(spark=None) -> None:
-    """Drop every session pin: named slots, LRU pools, checkpoint pools, and
-    (when ``spark`` is given) the whole catalog cache.
+    """Drop every session pin: named slots, LRU pools, checkpoint pools, the
+    :func:`keep_result` memos, and (when ``spark`` is given) the whole
+    catalog cache. The one reset: call it after rewriting input files in
+    place mid-session, or a same-plan lookup would serve the old result.
 
     Harness hook — ``bench.py`` and ``tools/check_correctness.py`` call this
     BETWEEN queries so one query's warm cache cannot tax its neighbour's
@@ -128,15 +143,43 @@ def release_all(spark=None) -> None:
     # so a neighbour query could be measured against leftover blocks)
     for pool in _CKPT_POOLS.values():
         for _orig, ckpt in pool.values():
-            _unpersist_ckpt_blocks(ckpt)
+            release_checkpoint(ckpt)
     _CKPT_POOLS.clear()
+    _RESULTS.clear()
     if spark is not None:
-        # also drop operator-internal persists that outlive their call
-        # (graph/dedup/similarity pin intermediates on lazily returned frames)
+        # also drop raw persists that outlive their operator call (pins on
+        # lazily returned frames made outside the keep_* helpers)
         try:
             spark.catalog.clearCache()
         except Exception:  # noqa: BLE001, S110
             pass
+
+
+def keep_result(key: DataFrame, slot: str, params: tuple, build):
+    """``build()``, memoized one-deep under ``slot``: a repeat call with the
+    same session, equal ``params`` and a ``key`` plan semantically equal to
+    the stored one returns the stored result; anything else rebuilds and
+    replaces it. For operators that run their work at construction time, so
+    the reuse check must run against the INPUT plan before the work starts.
+    Like every pin here, this assumes inputs are immutable between
+    :func:`release_all` calls."""
+    prev = _RESULTS.get(slot)
+    if prev is not None:
+        prev_key, prev_params, out = prev
+        try:
+            # same-session guard: a memo bound to a stopped session would
+            # pass the pure-JVM plan comparison and crash on first action
+            if (
+                prev_key.sparkSession is key.sparkSession
+                and params == prev_params
+                and key.sameSemantics(prev_key)
+            ):
+                return out
+        except Exception:  # noqa: BLE001, S110 — prior session may be gone
+            pass
+    out = build()
+    _RESULTS[slot] = (key, params, out)
+    return out
 
 
 def keep_persisted(df: DataFrame, slot: str) -> DataFrame:

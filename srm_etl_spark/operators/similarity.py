@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session_cache import keep_result
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a_i * b_i via zip_with + aggregate — JVM-side, no UDF."""
@@ -379,24 +381,6 @@ def ivf_topk_partitioned(
 # k-means (Lloyd) — the IVF quantizer trainer / semantic-dedup clusterer
 # --------------------------------------------------------------------------
 
-# One-deep training memo (the duplicate_clusters discipline): the Lloyd loop
-# collects centroids eagerly at construction, so when the clustering query
-# and semantic dedup train on the same corpus in one session the second call
-# reuses the assignment plan instead of re-syncing.
-_KMEANS_MEMO: list = []
-
-
-def clear_kmeans_memo() -> None:
-    """Drop the kmeans memo and release any persisted state it pins
-    (the in-place sf_dir rewrite escape hatch — see clear_cluster_memo)."""
-    for _, _, out in _KMEANS_MEMO:
-        try:
-            out.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001, S110 — session may be gone
-            pass
-    _KMEANS_MEMO.clear()
-
-
 def _sq_dist_to_literal(vec: Column, centroid: list[float]) -> Column:
     lit = F.array(*[F.lit(float(x)) for x in centroid])
     return F.aggregate(
@@ -615,7 +599,6 @@ def kmeans(
     k: int = 8,
     iterations: int = 2,
     round_to: int = 6,
-    use_cache: bool = True,
     train_filter: Column | None = None,
 ) -> DataFrame:
     """Lloyd's k-means with deterministic init: cluster assignment for every
@@ -647,6 +630,11 @@ def kmeans(
     - The k x dim centroid matrix is the only thing collected per round —
       bounded by design (it must fit in the plan as literals), the classic
       Lloyd driver sync.
+
+    The Lloyd loop collects centroids eagerly at construction, so a repeat
+    call on the same corpus plan and parameters (the clustering query and
+    semantic dedup in one session) returns the stored assignment frame
+    through ``session_cache.keep_result`` instead of re-syncing.
     """
     if k <= 0 or iterations <= 0:
         raise ValueError("k and iterations must be positive")
@@ -654,19 +642,16 @@ def kmeans(
         vec_col, id_col, k, iterations, round_to,
         None if train_filter is None else str(train_filter),
     )
-    if not use_cache:
-        clear_kmeans_memo()
-    if _KMEANS_MEMO:
-        prev_df, prev_params, prev_out = _KMEANS_MEMO[0]
-        try:
-            if (
-                prev_df.sparkSession is df.sparkSession
-                and params == prev_params
-                and df.sameSemantics(prev_df)
-            ):
-                return prev_out
-        except Exception:  # noqa: BLE001, S110 — prior session may be gone
-            _KMEANS_MEMO.clear()
+    return keep_result(
+        df, "kmeans", params,
+        lambda: _kmeans(df, vec_col, id_col, k, iterations, round_to, train_filter),
+    )
+
+
+def _kmeans(
+    df: DataFrame, vec_col: str, id_col: str, k: int, iterations: int, round_to: int,
+    train_filter: Column | None,
+) -> DataFrame:
     base = df if train_filter is None else df.filter(train_filter)
     data = df.select(
         F.col(id_col).alias("_kid"), F.col(vec_col).cast("array<double>").alias("_v")
@@ -700,9 +685,6 @@ def kmeans(
     if train is not data:
         train.unpersist(blocking=False)
     data.unpersist(blocking=False)
-    if use_cache:
-        clear_kmeans_memo()  # evict (and unpersist) the predecessor
-        _KMEANS_MEMO[:] = [(df, params, out)]
     return out
 
 
@@ -752,19 +734,6 @@ def quantize_embeddings(
 # Product quantization (PQ) — FAISS-IVFPQ-style fine compression
 # --------------------------------------------------------------------------
 
-# One-deep training memo (the duplicate_clusters discipline): PQ training
-# executes eagerly (driver syncs per Lloyd iteration), so when the PQ index
-# query and the rerank serving query train on the same corpus in one session
-# the second call replays the driver-held codebooks instead of the scans.
-_PQ_MEMO: list = []
-
-
-def clear_pq_memo() -> None:
-    """Drop the PQ training memo (codebooks are driver-held dicts — no
-    cluster state to release; clearing unpins the input frame reference)."""
-    _PQ_MEMO.clear()
-
-
 def pq_train_codebooks(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -773,7 +742,6 @@ def pq_train_codebooks(
     k: int = 16,
     iterations: int = 2,
     dim: int = 64,
-    use_cache: bool = True,
 ) -> dict[int, dict[int, list[float]]]:
     """Train one k-codeword codebook per subspace: the vector is split into
     ``m`` contiguous subvectors and each subspace gets its own k-means run
@@ -790,25 +758,25 @@ def pq_train_codebooks(
     k-means runs each doing their own scans and driver syncs (measured 3x
     on q92). The arithmetic per subspace is identical to :func:`kmeans`
     (same init, same argmin tie-break, same 6-decimal centroid grid).
+
+    Training executes eagerly (driver syncs per Lloyd iteration), so a
+    repeat call on the same corpus plan and parameters (the PQ index query
+    and the rerank serving query in one session) replays the stored
+    codebooks through ``session_cache.keep_result`` instead of the scans.
     """
     if dim % m != 0:
         raise ValueError("dim must be divisible by m")
     if k <= 0 or iterations <= 0:
         raise ValueError("k and iterations must be positive")
-    params = (vec_col, id_col, m, k, iterations, dim)
-    if not use_cache:
-        clear_pq_memo()
-    if _PQ_MEMO:
-        prev_df, prev_params, prev_books = _PQ_MEMO[0]
-        try:
-            if (
-                prev_df.sparkSession is df.sparkSession
-                and params == prev_params
-                and df.sameSemantics(prev_df)
-            ):
-                return prev_books
-        except Exception:  # noqa: BLE001, S110 — prior session may be gone
-            _PQ_MEMO.clear()
+    return keep_result(
+        df, "pq_codebooks", (vec_col, id_col, m, k, iterations, dim),
+        lambda: _pq_train_codebooks(df, vec_col, id_col, m, k, iterations, dim),
+    )
+
+
+def _pq_train_codebooks(
+    df: DataFrame, vec_col: str, id_col: str, m: int, k: int, iterations: int, dim: int
+) -> dict[int, dict[int, list[float]]]:
     sub = dim // m
     data = df.select(
         F.col(id_col).alias("_kid"), F.col(vec_col).cast("array<double>").alias("_v")
@@ -866,8 +834,6 @@ def pq_train_codebooks(
         for r in rows:
             books[int(r["j"])][int(r["cluster"])] = list(r["centroid"])
     data.unpersist(blocking=False)
-    if use_cache:
-        _PQ_MEMO[:] = [(df, params, books)]
     return books
 
 

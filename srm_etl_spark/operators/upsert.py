@@ -84,13 +84,3 @@ def staging_upsert(
         out = out.filter(F.col("_changed"))
     return out
 
-
-def write_staging(df: DataFrame, path: str, partition_by: str = "source") -> None:
-    """Partition-overwrite write of a staging table (partitioned by source so
-    per-source refreshes rewrite only their own partition)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_by)
-        .parquet(path)
-    )

@@ -118,11 +118,6 @@ def first_per_group(
     return ranked.filter(F.col("_rn") == 1).drop("_rn")
 
 
-def attach_group_count(df: DataFrame, keys: list[str], out_col: str) -> DataFrame:
-    """count(*) over (partition by keys) attached to every member row (W3)."""
-    return df.withColumn(out_col, F.count("*").over(Window.partitionBy(*keys)))
-
-
 def _contains_unorderable(dt) -> bool:
     """True if the type can't participate in struct min/max ordering
     (MapType anywhere in the nesting)."""

@@ -707,7 +707,6 @@ def card_search(
     sf_dir: str,
     city: str = "NATION_3",
     response_token: str = "responses:economy",
-    use_cache: bool = True,
 ) -> DataFrame:
     """The flagship search ("cards for response X in city Y", SURVEY §7.1)
     with the filters pushed BELOW the derive DAG instead of over the finished
@@ -739,19 +738,17 @@ def card_search(
     # session slot keeps repeated searches from recomputing the branch ⋈
     # location ⋈ org dedup. fb's plan depends only on (sf_dir, city), so a
     # different city evicts the slot while a response-only change reuses it
-    # (the response predicate prunes services, downstream of fb).
-    # use_cache=False (run_derive's escape hatch) bypasses the slot for
-    # callers that rewrite the sf_dir fixtures in place mid-session.
+    # (the response predicate prunes services, downstream of fb). Callers
+    # that rewrite the sf_dir fixtures in place mid-session call
+    # session_cache.release_all first.
     from ..operators.session_cache import keep_persisted  # noqa: PLC0415
 
-    fb = flat_branches(brs_f, locs, orgs)
-    if use_cache:
-        fb = keep_persisted(fb, "card_search_fb")
+    fb = keep_persisted(flat_branches(brs_f, locs, orgs), "card_search_fb")
     ft = flat_table(flat_services(svcs_f, fb), fb)
     return card_data(ft)
 
 
-def run_derive(spark: SparkSession, sf_dir: str, use_cache: bool = True) -> dict[str, DataFrame]:
+def run_derive(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Build every derive stage from the staging fixtures, with the two
     multi-consumer stages pinned as LAZY lineage-truncating checkpoints:
 
@@ -782,13 +779,9 @@ def run_derive(spark: SparkSession, sf_dir: str, use_cache: bool = True) -> dict
     locs = FIX.locations(spark, sf_dir)
     brs = FIX.branches(spark, sf_dir)
     svcs = FIX.services(spark, sf_dir)
-    fb = flat_branches(brs, locs, orgs)
-    if use_cache:
-        fb = keep_checkpointed_pooled(fb, "derive_stages", eager=False)
+    fb = keep_checkpointed_pooled(flat_branches(brs, locs, orgs), "derive_stages", eager=False)
     fs = flat_services(svcs, fb)
-    ft = flat_table(fs, fb)
-    if use_cache:
-        ft = keep_checkpointed_pooled(ft, "derive_stages", eager=False)
+    ft = keep_checkpointed_pooled(flat_table(fs, fb), "derive_stages", eager=False)
     # card_data / card_data_full plans are built ON ACCESS: their expression
     # trees are large (nested array transforms, Arrow kernels — ~1 s of
     # driver-side construction), and most consumers read only the flat

@@ -19,7 +19,7 @@ Rules of thumb encoded here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -57,6 +57,3 @@ def write_partitioned(
     equality/range predicates on those columns prune at planning time."""
     df.write.format("parquet").mode(mode).partitionBy(*partition_cols).save(path)
 
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -517,7 +517,7 @@ def test_q171_exercises_salted_split_and_sample_training(spark):
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     assigned = kmeans(
         emb, "embedding", "vec_id", k=96, iterations=2,
-        train_filter=F.col("vec_id") % 2 == 0, use_cache=False,
+        train_filter=F.col("vec_id") % 2 == 0,
     ).persist()
     try:
         salted = embedding_near_dup_pairs_arrow(

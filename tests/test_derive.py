@@ -167,19 +167,21 @@ def test_card_search_slot_never_leaks_across_sf_dirs(spark):
     """The session slot is plan-keyed (sameSemantics), so switching sf_dir
     must evict rather than serve the other dir's branches — pinned because
     the memo family is load-bearing for bench and correctness runs."""
+    from srm_etl_spark.operators.session_cache import release_all
     from srm_etl_spark.pipelines.derive import card_search
 
     small = card_search(spark, "/root/testdata/sf0.001")
     big = card_search(spark, "/root/testdata/sf0.01")
-    big_fresh = card_search(spark, "/root/testdata/sf0.01", use_cache=False)
-    assert sorted(r["card_key"] for r in big.collect()) == sorted(
-        r["card_key"] for r in big_fresh.collect()
-    )
+    big_rows = sorted(r["card_key"] for r in big.collect())
     # and going back re-evicts instead of serving the big-dir slot
     small_again = card_search(spark, "/root/testdata/sf0.001")
     assert sorted(r["card_key"] for r in small.collect()) == sorted(
         r["card_key"] for r in small_again.collect()
     )
+    # an empty slot: sf0.01 built from scratch matches what the slot served
+    release_all(spark)
+    big_fresh = card_search(spark, "/root/testdata/sf0.01")
+    assert big_rows == sorted(r["card_key"] for r in big_fresh.collect())
 
 
 def test_lazy_stages_dict_contract(spark):

@@ -110,21 +110,83 @@ def test_keep_best_representative_unscored_members_survive(spark):
     assert rows[1].quality is None
 
 
-def test_duplicate_clusters_use_cache_false_bypasses_and_clears_memo(spark):
-    from srm_etl_spark.operators import graph as G
+@pytest.mark.parametrize("op", ["duplicate_clusters", "kmeans", "pq_train_codebooks"])
+def test_eager_operator_memo_lasts_until_release_all(spark, op):
+    """The eagerly-trained operators memoize on their input plan: a repeat
+    call returns the stored result object, and ``release_all`` (the one
+    reset) forces a rebuild with equal rows."""
+    from srm_etl_spark.operators.session_cache import release_all
+    from srm_etl_spark.operators.similarity import kmeans, pq_train_codebooks
 
-    pairs = spark.createDataFrame([(1, 2), (3, 4)], "left_id long, right_id long")
-    a = G.duplicate_clusters(pairs)
-    assert G._CLUSTER_MEMO, "warm path should memoize"
-    memo_out = G._CLUSTER_MEMO[0][2]
-    assert G.duplicate_clusters(pairs) is memo_out  # same-plan reuse
-    # the escape hatch: bypass AND clear (the in-place-rewrite scenario)
-    b = G.duplicate_clusters(pairs, use_cache=False)
-    assert b is not memo_out
-    assert not G._CLUSTER_MEMO
-    assert sorted((r.node, r.component) for r in a.collect()) == sorted(
-        (r.node, r.component) for r in b.collect()
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), float(i % 7), float(i % 2)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
     )
+    pairs = spark.createDataFrame([(1, 2), (3, 4), (2, 5)], "left_id long, right_id long")
+    run = {
+        "duplicate_clusters": lambda: duplicate_clusters(pairs),
+        "kmeans": lambda: kmeans(vecs, k=3, iterations=2),
+        "pq_train_codebooks": lambda: pq_train_codebooks(vecs, m=2, k=3, iterations=2, dim=4),
+    }[op]
+
+    def rows(out):
+        return out if isinstance(out, dict) else sorted(tuple(r) for r in out.collect())
+
+    first = run()
+    want = rows(first)
+    assert run() is first
+    release_all(spark)
+    fresh = run()
+    assert fresh is not first
+    assert rows(fresh) == want
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _checkpoint_rdd_id(ckpt) -> int:
+    return ckpt._jdf.queryExecution().analyzed().rdd().id()
+
+
+def test_release_checkpoint_frees_only_the_checkpoint(spark):
+    """A cache first built INSIDE the checkpoint's action (the CC loop's
+    edge list in round 1) must survive releasing that checkpoint: diffing
+    persistent-RDD ids around the action would catch and free it too."""
+    from pyspark.sql import functions as F
+
+    from srm_etl_spark.operators.session_cache import release_checkpoint
+
+    df = spark.createDataFrame([(i % 5, i) for i in range(50)], "k long, v long")
+    src = df.repartition(2).persist()  # no action yet: built by the checkpoint
+    try:
+        before = _persistent_rdd_ids(spark)
+        ck = src.groupBy("k").agg(F.sum("v").alias("s")).localCheckpoint(eager=True)
+        built = _persistent_rdd_ids(spark) - before
+        ck_id = _checkpoint_rdd_id(ck)
+        src_ids = built - {ck_id}
+        assert ck_id in built and src_ids
+        release_checkpoint(ck)
+        after = _persistent_rdd_ids(spark)
+        assert ck_id not in after
+        assert src_ids <= after
+        assert src.count() == 50
+    finally:
+        src.unpersist()
+
+
+def test_pagerank_frees_superseded_checkpoints(spark):
+    """Only the returned frame's checkpoint outlives pagerank: every earlier
+    iteration's blocks are released as soon as the next one materializes."""
+    from srm_etl_spark.operators.graph import pagerank
+    from srm_etl_spark.operators.session_cache import release_checkpoint
+
+    edges = spark.createDataFrame([(i, (i + 1) % 20) for i in range(20)], "src long, dst long")
+    before = _persistent_rdd_ids(spark)
+    pr = pagerank(edges, iterations=4, checkpoint_every=1)
+    assert _persistent_rdd_ids(spark) - before == {_checkpoint_rdd_id(pr)}
+    assert pr.count() == 20
+    release_checkpoint(pr)
 
 
 def test_pagerank_rank_join_broadcast_gated_by_threshold(spark):

@@ -195,19 +195,3 @@ def test_assign_hierarchical_exact_at_real_large_k(spark, monkeypatch):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert got_small == want
-
-
-def test_kmeans_use_cache_false_bypasses_memo(spark):
-    from srm_etl_spark.operators import similarity as S
-
-    df = spark.createDataFrame(
-        [(i, [float(i % 5), float(i % 3)]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    a = S.kmeans(df, k=3, iterations=2)
-    assert S._KMEANS_MEMO
-    b = S.kmeans(df, k=3, iterations=2, use_cache=False)
-    assert not S._KMEANS_MEMO
-    assert sorted((r.vec_id, r.cluster) for r in a.collect()) == sorted(
-        (r.vec_id, r.cluster) for r in b.collect()
-    )

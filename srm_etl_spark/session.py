@@ -147,6 +147,60 @@ def parse_byte_size(value, default: int | None = None) -> int:
         raise ValueError(f"unparseable byte size: {value!r}") from None
 
 
+# Memory-cgroup limit files, read only: v2 ``memory.max`` (``max`` when
+# unlimited) and v1 ``memory.limit_in_bytes`` (a near-2^63 number when
+# unlimited). Inside a memory-limited container the limit, not the host's
+# physical memory, is what the JVM can really have.
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+# Ceiling of the derived default heap (the former fixed default;
+# hosts with 96 GiB or more still get it).
+_DRIVER_MEMORY_CAP_GIB = 48
+
+
+def available_memory_bytes() -> int | None:
+    """Memory this process can have: physical memory (``MemTotal`` on
+    Linux), lowered to any numeric memory-cgroup limit. ``None`` when the
+    platform reports neither."""
+    try:
+        total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        total = None
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as fh:
+                limit = int(fh.read().strip())
+        except (OSError, ValueError):  # absent, unreadable, or "max"
+            continue
+        total = limit if total is None else min(total, limit)
+    return total
+
+
+def driver_memory(mem_bytes: int | None = None, env=os.environ) -> str:
+    """Value of ``spark.driver.memory`` for :func:`get_spark`.
+
+    ``SPARK_DRIVER_MEMORY`` wins when set; the ``SPARK_GRAFT_SPILL=1`` axis
+    keeps its 12g heap (see the comment in :func:`get_spark`). Otherwise
+    half of ``mem_bytes`` (default: :func:`available_memory_bytes`) in whole
+    GiB, at least 1 GiB and at most 48 GiB: local mode runs the driver, its
+    executors and the Python workers on one host, so a heap past physical
+    memory gets the JVM killed part-way through a long session rather than
+    spilling."""
+    if env.get("SPARK_DRIVER_MEMORY") is not None:
+        return env["SPARK_DRIVER_MEMORY"]
+    if env.get("SPARK_GRAFT_SPILL") == "1":
+        return "12g"
+    if mem_bytes is None:
+        mem_bytes = available_memory_bytes()
+    if mem_bytes is None:
+        return f"{_DRIVER_MEMORY_CAP_GIB}g"
+    gib = max(1, min(_DRIVER_MEMORY_CAP_GIB, mem_bytes // 2 // (1 << 30)))
+    return f"{gib}g"
+
+
 def get_spark(
     app_name: str = "srm-etl-spark",
     master: str | None = None,
@@ -223,13 +277,7 @@ def get_spark(
         # memory (py4j bridges, codegen caches, parquet footers), which
         # after ~130 queries of a single-session sweep kills collects with
         # heap exhaustion unrelated to operator spill behavior.
-        .config(
-            "spark.driver.memory",
-            os.environ.get(
-                "SPARK_DRIVER_MEMORY",
-                "12g" if os.environ.get("SPARK_GRAFT_SPILL") == "1" else "48g",
-            ),
-        )
+        .config("spark.driver.memory", driver_memory())
         .config(
             "spark.memory.fraction",
             "0.05" if os.environ.get("SPARK_GRAFT_SPILL") == "1" else "0.6",

@@ -33,7 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .session_cache import keep_result, release_checkpoint
+from .session_cache import keep_result, release_checkpoint, track_checkpoint
 
 
 def connected_components(
@@ -128,7 +128,7 @@ def connected_components(
         labels = new_labels
         if converged:
             edges.unpersist()
-            return labels.select("node", "component")
+            return track_checkpoint(labels).select("node", "component")
     edges.unpersist()
     raise RuntimeError(
         f"connected_components: no fixpoint after {max_iter} rounds "
@@ -202,6 +202,7 @@ def _cc_star(pairs: DataFrame, left_col: str, right_col: str, max_iter: int) -> 
         edges = new_edges
         if new_sig == sig:
             # fixpoint: every edge points at its component minimum
+            track_checkpoint(edges)
             left_labels = edges.groupBy("u").agg(F.min("v").alias("component")).select(
                 F.col("u").alias("node"), "component"
             )
@@ -392,4 +393,4 @@ def pagerank(
     e.unpersist(blocking=False)
     edges_w.unpersist(blocking=False)
     nodes.unpersist(blocking=False)
-    return pr
+    return track_checkpoint(pr)

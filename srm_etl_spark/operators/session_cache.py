@@ -13,19 +13,29 @@ is bounded to one frame per slot.
 
 The module also owns every release: :func:`release_checkpoint` frees one
 checkpoint's blocks (the iterative graph operators call it per round),
+:func:`track_checkpoint` registers a checkpoint an operator returns,
 :func:`keep_result` memoizes operators that train eagerly, and
 :func:`release_all` is the one reset for all of it.
+
+The registries are shared by every driver thread (the ES publish fans its
+indexes out over threads): ``_LOCK`` guards each read and write of them, and
+is never held across a Spark call that may run jobs (``persist``,
+``localCheckpoint``) — two threads pinning into one pool build their pins
+concurrently and only their registry updates are serialized.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import threading
 
-from pyspark import StorageLevel
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame
 
 _log = logging.getLogger(__name__)
+
+_LOCK = threading.Lock()
 
 _SLOTS: dict[str, DataFrame] = {}
 
@@ -50,6 +60,11 @@ _CKPT_POOLS: dict[str, dict[int, tuple[DataFrame, DataFrame]]] = {}
 # params, result). One entry per slot; release_all drops them all.
 _RESULTS: dict[str, tuple[DataFrame, tuple, object]] = {}
 
+# Checkpoints the operators hand back to their callers (track_checkpoint):
+# (SparkContext, block RDD id). Ids, not frames: holding the frame would keep
+# its blocks alive until release_all even after the caller dropped it.
+_RETURNED: list[tuple[SparkContext, int]] = []
+
 
 def release_checkpoint(ckpt: DataFrame) -> None:
     """Deterministically free a localCheckpoint'ed frame's executor blocks.
@@ -69,6 +84,34 @@ def release_checkpoint(ckpt: DataFrame) -> None:
         ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:  # noqa: BLE001 — GC path remains correct
         _log.warning("session_cache: could not release checkpoint blocks", exc_info=True)
+
+
+def track_checkpoint(ckpt: DataFrame) -> DataFrame:
+    """Register ``ckpt``, a localCheckpoint an operator returns to its
+    caller (the graph operators' labels and ranks), so :func:`release_all`
+    frees its blocks like a pool pin's. Only the block RDD's id is kept: a
+    caller that drops the frame sooner still leaves the blocks to the GC
+    path. Returns ``ckpt``."""
+    rdd_id = ckpt._jdf.queryExecution().analyzed().rdd().id()
+    with _LOCK:
+        _RETURNED.append((ckpt.sparkSession.sparkContext, rdd_id))
+    return ckpt
+
+
+def _release_returned(returned: list[tuple[SparkContext, int]]) -> None:
+    live = SparkContext._active_spark_context
+    persistent = None
+    for sc, rdd_id in returned:
+        if sc is not live:  # RDD ids restart with a new context
+            continue
+        try:
+            if persistent is None:
+                persistent = sc._jsc.getPersistentRDDs()
+            rdd = persistent.get(rdd_id)
+            if rdd is not None:  # else already freed by the GC path
+                rdd.unpersist(False)
+        except Exception:  # noqa: BLE001 — GC path remains correct
+            _log.warning("session_cache: could not release checkpoint blocks", exc_info=True)
 
 
 def _reliable_checkpoint_dir(spark) -> str | None:
@@ -103,16 +146,18 @@ def checkpoint_pool_originals() -> list[tuple[str, DataFrame]]:
     pushed filters and exchanges execute at construction, so an audit that
     only greps the final plan would silently pass anti-patterns buried in
     the build."""
-    return [
-        (pool, orig)
-        for pool, slots in _CKPT_POOLS.items()
-        for (orig, _ckpt) in slots.values()
-    ]
+    with _LOCK:
+        return [
+            (pool, orig)
+            for pool, slots in _CKPT_POOLS.items()
+            for (orig, _ckpt) in slots.values()
+        ]
 
 
 def release_all(spark=None) -> None:
     """Drop every session pin: named slots, LRU pools, checkpoint pools, the
-    :func:`keep_result` memos, and (when ``spark`` is given) the whole
+    :func:`keep_result` memos, the checkpoints registered with
+    :func:`track_checkpoint`, and (when ``spark`` is given) the whole
     catalog cache. The one reset: call it after rewriting input files in
     place mid-session, or a same-plan lookup would serve the old result.
 
@@ -124,28 +169,28 @@ def release_all(spark=None) -> None:
     answer, PROVIDED no deferred action on a previously returned frame is
     still pending (the resample-desync pins of enumerate_rows_scalable) —
     harnesses therefore release only after fully materializing a query."""
-    for df in _SLOTS.values():
+    with _LOCK:
+        persisted = list(_SLOTS.values())
+        persisted += [df for pool in _POOLS.values() for df in pool.values()]
+        ckpts = [ckpt for pool in _CKPT_POOLS.values() for _o, ckpt in pool.values()]
+        returned = list(_RETURNED)
+        _SLOTS.clear()
+        _POOLS.clear()
+        _CKPT_POOLS.clear()
+        _RETURNED.clear()
+        _RESULTS.clear()
+    for df in persisted:
         try:
             df.unpersist(blocking=False)
         except Exception:  # noqa: BLE001, S110 — session may be gone
             pass
-    _SLOTS.clear()
-    for pool in _POOLS.values():
-        for df in pool.values():
-            try:
-                df.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001, S110
-                pass
-    _POOLS.clear()
     # checkpoint blocks are RDD-cached outside the CacheManager; unpersist
     # the materialized block RDDs directly (deterministic — dropping the
     # reference alone waits on py4j finalization + JVM GC + ContextCleaner,
     # so a neighbour query could be measured against leftover blocks)
-    for pool in _CKPT_POOLS.values():
-        for _orig, ckpt in pool.values():
-            release_checkpoint(ckpt)
-    _CKPT_POOLS.clear()
-    _RESULTS.clear()
+    for ckpt in ckpts:
+        release_checkpoint(ckpt)
+    _release_returned(returned)
     if spark is not None:
         # also drop raw persists that outlive their operator call (pins on
         # lazily returned frames made outside the keep_* helpers)
@@ -163,7 +208,8 @@ def keep_result(key: DataFrame, slot: str, params: tuple, build):
     the reuse check must run against the INPUT plan before the work starts.
     Like every pin here, this assumes inputs are immutable between
     :func:`release_all` calls."""
-    prev = _RESULTS.get(slot)
+    with _LOCK:
+        prev = _RESULTS.get(slot)
     if prev is not None:
         prev_key, prev_params, out = prev
         try:
@@ -178,14 +224,39 @@ def keep_result(key: DataFrame, slot: str, params: tuple, build):
         except Exception:  # noqa: BLE001, S110 — prior session may be gone
             pass
     out = build()
-    _RESULTS[slot] = (key, params, out)
+    with _LOCK:
+        _RESULTS[slot] = (key, params, out)
     return out
+
+
+def _refresh(registry: dict, pool: str, key: int, entry) -> None:
+    """Move ``entry`` to the most-recently-used end of its pool (dicts keep
+    insertion order), unless a release or another thread replaced it."""
+    with _LOCK:
+        slots = registry.get(pool)
+        if slots is not None and slots.get(key) is entry:
+            slots[key] = slots.pop(key)
+
+
+def _insert(registry: dict, pool: str, key: int, entry, max_slots: int) -> list:
+    """Store ``entry`` as its pool's most recent; return the ``(key, entry)``
+    pairs evicted to stay within ``max_slots``, least-recently-used first."""
+    with _LOCK:
+        slots = registry.setdefault(pool, {})
+        slots.pop(key, None)
+        evicted = []
+        while len(slots) >= max_slots:
+            victim = next(iter(slots))
+            evicted.append((victim, slots.pop(victim)))
+        slots[key] = entry
+    return evicted
 
 
 def keep_persisted(df: DataFrame, slot: str) -> DataFrame:
     """Persist ``df`` under ``slot``, reusing the previous persist when the
     plan is semantically identical (warm repeats) and evicting it when not."""
-    prev = _SLOTS.get(slot)
+    with _LOCK:
+        prev = _SLOTS.get(slot)
     if prev is not None:
         try:
             if df.sameSemantics(prev):
@@ -194,7 +265,8 @@ def keep_persisted(df: DataFrame, slot: str) -> DataFrame:
         except Exception:  # noqa: BLE001, S110 — prior session may be gone
             pass
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _SLOTS[slot] = df
+    with _LOCK:
+        _SLOTS[slot] = df
     return df
 
 
@@ -214,22 +286,19 @@ def keep_persisted_pooled(
     (enumerate_rows_scalable) plumb their own ``max_slots`` sized to the
     number of frames they may hold open, and every eviction is logged so a
     desync would be diagnosable rather than silent."""
-    slots = _POOLS.setdefault(pool, {})
     key = df.semanticHash()
-    prev = slots.get(key)
+    with _LOCK:
+        prev = _POOLS.get(pool, {}).get(key)
     if prev is not None:
         try:
             if df.sameSemantics(prev):
-                # refresh LRU position (dict preserves insertion order)
-                slots[key] = slots.pop(key)
+                _refresh(_POOLS, pool, key, prev)
                 return prev
             prev.unpersist(blocking=False)
         except Exception:  # noqa: BLE001, S110 — prior session may be gone
             pass
-        slots.pop(key, None)
-    while len(slots) >= max_slots:
-        victim = next(iter(slots))  # least-recently-used
-        evicted = slots.pop(victim)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    for victim, evicted in _insert(_POOLS, pool, key, df, max_slots):
         # routine LRU churn logs at DEBUG; callers whose correctness depends
         # on a pin outliving a deferred action (enumerate_rows_scalable's
         # range-boundary pins) pass warn_on_evict=True so THEIR evictions
@@ -245,8 +314,6 @@ def keep_persisted_pooled(
             evicted.unpersist(blocking=False)
         except Exception:  # noqa: BLE001, S110
             pass
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    slots[key] = df
     return df
 
 
@@ -277,9 +344,9 @@ def keep_checkpointed_pooled(
     could collide across distinct plans and silently serve wrong data), so
     warm repeats of the same stage reuse the computed checkpoint exactly
     like the persist pools."""
-    slots = _CKPT_POOLS.setdefault(pool, {})
     key = df.semanticHash()
-    prev = slots.get(key)
+    with _LOCK:
+        prev = _CKPT_POOLS.get(pool, {}).get(key)
     if prev is not None:
         orig, ckpt = prev
         try:
@@ -287,7 +354,7 @@ def keep_checkpointed_pooled(
             # round-trip (client-side memoized attrs like schema would not
             # notice a torn-down session); a dead session throws → rebuild
             if df.sameSemantics(orig):
-                slots[key] = slots.pop(key)  # refresh LRU position
+                _refresh(_CKPT_POOLS, pool, key, prev)
                 return ckpt
             # 32-bit semanticHash collision between distinct plans: do NOT
             # serve the stored checkpoint; fall through and overwrite
@@ -297,18 +364,6 @@ def keep_checkpointed_pooled(
             )
         except Exception:  # noqa: BLE001, S110 — prior session gone
             pass
-        slots.pop(key, None)
-    while len(slots) >= max_slots:
-        victim = next(iter(slots))
-        # drop the REFERENCE only (ContextCleaner reclaims after GC): an
-        # evicted localCheckpoint frame may still be lazily referenced by a
-        # caller, and unlike a persist (recompute on miss) its blocks are
-        # the only copy — deterministic freeing here would turn a benign
-        # LRU eviction into "checkpoint block not found" downstream. The
-        # deterministic path lives in release_all(), whose contract is that
-        # harnesses call it only between fully-materialized queries.
-        _log.debug("session_cache ckpt pool %r dropping LRU %s", pool, victim)
-        slots.pop(victim)
     # Cluster posture: with SPARK_GRAFT_RELIABLE_CKPT_DIR set, pin to a
     # RELIABLE checkpoint (durable files — survives executor loss; a
     # localCheckpoint block has no lineage to recompute from, so one lost
@@ -318,5 +373,13 @@ def keep_checkpointed_pooled(
         out = df.checkpoint(eager=eager)
     else:
         out = df.localCheckpoint(eager=eager)
-    slots[key] = (df, out)
+    for victim, _entry in _insert(_CKPT_POOLS, pool, key, (df, out), max_slots):
+        # drop the REFERENCE only (ContextCleaner reclaims after GC): an
+        # evicted localCheckpoint frame may still be lazily referenced by a
+        # caller, and unlike a persist (recompute on miss) its blocks are
+        # the only copy — deterministic freeing here would turn a benign
+        # LRU eviction into "checkpoint block not found" downstream. The
+        # deterministic path lives in release_all(), whose contract is that
+        # harnesses call it only between fully-materialized queries.
+        _log.debug("session_cache ckpt pool %r dropping LRU %s", pool, victim)
     return out

@@ -34,10 +34,16 @@ the backup flow's rank gate is the only one, and only when requested.
 
 from __future__ import annotations
 
+import logging
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.taxonomy import update_taxonomy_with_parents
+
+_log = logging.getLogger(__name__)
 
 # reference to_es.py:179-184 — hand-curated region entries (domain constants,
 # shared-literal no-drift discipline)
@@ -165,7 +171,18 @@ def operator_publish_all(
     surfaces consume it and each publish runs several actions (bulk ship +
     revision sweep), so with a persist every one of those plans nested the
     full card_data_full subtree — q161 carried 172 runtime exchange nodes
-    that way; with the pin each bottoms out at the block scan."""
+    that way; with the pin each bottoms out at the block scan.
+
+    The reference publishes the six indexes one after another; they are
+    independent, so here each gets its own driver thread (its surface
+    construction, its own dimension pins and its publish), and their Spark
+    jobs share the executors. A serial chain of small jobs kept a 4-core
+    host about half idle. The derive run, the card pin and every derive
+    stage a surface reads are built on the calling thread first
+    (``run_derive``'s lazy stage map is not thread-safe); autocomplete, the
+    longest publish, starts first, then cards. Every thread is joined before
+    this returns or raises; the first failure in index order is raised and
+    any later one is logged."""
     from ..operators.session_cache import keep_checkpointed_pooled  # noqa: PLC0415
     from ..pipelines import staging_fixtures as FIX  # noqa: PLC0415
     from ..pipelines.autocomplete import (  # noqa: PLC0415
@@ -177,6 +194,7 @@ def operator_publish_all(
     from ..sinks.es import publish  # noqa: PLC0415
 
     st = run_derive(spark, sf_dir)
+    # lazy: an eager build here would run before, not beside, the fan-out
     cards = keep_checkpointed_pooled(
         cards_api_surface(st["card_data_full"]).select(
             "card_id", "card_key", "service_id", "service_name", "branch_city",
@@ -187,36 +205,59 @@ def operator_publish_all(
         "es_operator_cards",
         eager=False,
     )
+    flat_table = st["flat_table"]
     locs = FIX.locations(spark, sf_dir)
-    surfaces = [
-        ("srm__cards", cards, "card_id"),
-        ("srm__places", places_surface(spark, locs), "key"),
-        (
-            "srm__responses",
-            taxonomy_count_surface(cards, FIX.responses_dim(spark, sf_dir), "response_ids"),
+    # index -> (surface builder, id column), in the reference's order
+    surfaces = {
+        "srm__cards": (lambda: cards, "card_id"),
+        "srm__places": (lambda: places_surface(spark, locs), "key"),
+        "srm__responses": (
+            lambda: taxonomy_count_surface(
+                cards, FIX.responses_dim(spark, sf_dir), "response_ids"
+            ),
             "id",
         ),
-        (
-            "srm__situations",
-            taxonomy_count_surface(cards, FIX.situations_dim(spark, sf_dir), "situation_ids"),
+        "srm__situations": (
+            lambda: taxonomy_count_surface(
+                cards, FIX.situations_dim(spark, sf_dir), "situation_ids"
+            ),
             "id",
         ),
-        ("srm__orgs", organizations_surface(cards, FIX.organizations(spark, sf_dir)), "id"),
-        (
-            "srm__autocomplete",
-            autocomplete_publish(
-                autocomplete_corpus(autocomplete_input(st["flat_table"]), city_bounds(locs))
+        "srm__orgs": (
+            lambda: organizations_surface(cards, FIX.organizations(spark, sf_dir)),
+            "id",
+        ),
+        "srm__autocomplete": (
+            lambda: autocomplete_publish(
+                autocomplete_corpus(autocomplete_input(flat_table), city_bounds(locs))
             ),
             "qid",
         ),
-    ]
-    revisions: dict[str, str] = {}
-    for index, df, id_col in surfaces:
-        revisions[index] = publish(
-            df, index, id_col, ship_factory(index), sweep,
+    }
+
+    def publish_one(index: str) -> str:
+        build, id_col = surfaces[index]
+        return publish(
+            build(), index, id_col, ship_factory(index), sweep,
             settle_seconds=settle_seconds, ensure=ensure,
         )
-    return revisions
+
+    longest_first = ["srm__autocomplete", "srm__cards"]
+    order = longest_first + [i for i in surfaces if i not in longest_first]
+    # one wrap per thread: each copies the caller's local properties (job
+    # group, tags) into its own Properties object. Leaving the block joins
+    # every worker thread, failed or not.
+    with ThreadPoolExecutor(max_workers=len(surfaces)) as pool:
+        futures = {
+            index: pool.submit(inheritable_thread_target(spark)(publish_one), index)
+            for index in order
+        }
+    errors = [(i, ex) for i in surfaces if (ex := futures[i].exception()) is not None]
+    for index, ex in errors[1:]:
+        _log.error("publish of %s failed too", index, exc_info=ex)
+    if errors:
+        raise errors[0][1]
+    return {index: futures[index].result() for index in surfaces}
 
 
 def autocomplete_publish(corpus: DataFrame, limit_rows: int | None = None) -> DataFrame:

@@ -292,6 +292,12 @@ def get_spark(
         # on the entities builders: process_services 1.90→1.42 s). Costs only
         # call-site lines in error messages; plans and results are untouched.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated classes live in a JVM-wide LRU cache, 100 entries by
+        # default. One pass of the composed refresh compiles about 220 (the
+        # ES publish about 190), so at 100 every warm pass recompiled, and
+        # re-JITted, all of them. 500 holds a pass with room to spare: the
+        # (Guava) cache evicts per segment, 4 segments of 125 entries.
+        .config("spark.sql.codegen.cache.maxEntries", "500")
     )
     if os.environ.get("SPARK_GRAFT_SPILL") == "1":
         # the fraction alone cannot force spills at test scale (a 19 MB/task

@@ -205,3 +205,44 @@ def test_operator_publish_all_six_indexes(spark, tmp_path):
         action, doc = lines[0].split("\t")
         assert json.loads(action)["index"]["_index"] == index
         assert json.loads(doc)["revision"] == revs[index]
+
+
+def test_operator_publish_all_failure_still_publishes_the_rest(spark, tmp_path):
+    """The six publishes run on their own threads. When one index's bulk
+    ship raises, that error reaches the caller, the other five indexes are
+    still shipped and swept, and no publish thread outlives the call."""
+    import os
+    import threading
+
+    from srm_etl_spark.pipelines.es_publish import operator_publish_all
+    from srm_etl_spark.sinks.es import recording_sweep, spool_ship
+
+    failing = "srm__orgs"
+    spools = {}
+
+    def ship_factory(index):
+        if index == failing:
+            def ship(rows):
+                raise RuntimeError(f"bulk endpoint down for {index}")
+
+            return ship
+        d = tmp_path / index
+        d.mkdir()
+        spools[index] = str(d)
+        return spool_ship(str(d))
+
+    sweeps = []
+    threads_before = threading.active_count()
+    with pytest.raises(Exception, match=f"bulk endpoint down for {failing}"):
+        operator_publish_all(
+            spark, "/root/testdata/sf0.001", ship_factory, recording_sweep(sweeps),
+        )
+    assert threading.active_count() == threads_before
+    others = {
+        "srm__cards", "srm__places", "srm__responses",
+        "srm__situations", "srm__autocomplete",
+    }
+    assert set(spools) == others
+    assert {i for i, _ in sweeps} == others
+    for index, d in spools.items():
+        assert os.listdir(d), f"{index}: empty bulk spool"

@@ -189,6 +189,25 @@ def test_pagerank_frees_superseded_checkpoints(spark):
     release_checkpoint(pr)
 
 
+def test_release_all_frees_returned_graph_checkpoints(spark):
+    """The labels ``duplicate_clusters`` returns and the ranks ``pagerank``
+    returns are checkpoints no pool holds: ``release_all`` frees them too,
+    so no new persistent RDD is left behind."""
+    from srm_etl_spark.operators.graph import pagerank
+    from srm_etl_spark.operators.session_cache import release_all
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "left_id long, right_id long")
+    edges = spark.createDataFrame([(i, (i + 1) % 20) for i in range(20)], "src long, dst long")
+    release_all(spark)
+    before = _persistent_rdd_ids(spark)
+    clusters = duplicate_clusters(pairs)
+    ranks = pagerank(edges, iterations=3)
+    assert clusters.count() == 5 and ranks.count() == 20
+    assert _persistent_rdd_ids(spark) - before  # both hold checkpoint blocks
+    release_all(spark)
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
 def test_pagerank_rank_join_broadcast_gated_by_threshold(spark):
     """The per-iteration rank join broadcasts the rank table only when the
     node count fits the session broadcast budget; with auto-broadcast

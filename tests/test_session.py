@@ -1,5 +1,6 @@
-"""Default driver-heap sizing (``session.driver_memory``), checked without a
-JVM except for the last test, which reads the heap the suite's session got."""
+"""Session settings: default driver-heap sizing (``session.driver_memory``),
+checked without a JVM except for the last two tests, which read the heap and
+the codegen cache of the suite's session."""
 
 import pytest
 
@@ -64,3 +65,19 @@ def test_cgroup_limit_lowers_physical_memory(tmp_path, monkeypatch):
 
 def test_session_uses_derived_heap(spark):
     assert spark.sparkContext.getConf().get("spark.driver.memory") == driver_memory()
+
+
+def test_codegen_cache_outlasts_the_default_100_entries(spark):
+    """A warm rerun finds its generated classes in the codegen cache even
+    after more than 100 other distinct plans were compiled (Spark's default
+    cache size; one pass of the composed refresh compiles about 220)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run(i):
+        spark.range(3).selectExpr(f"id + {i} AS v").collect()
+
+    for i in range(120):
+        run(i)
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    run(0)
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiled

@@ -2,6 +2,7 @@
 on the aggregate fast path and the window fallback, and graceful fallback for
 unorderable (MapType) frames."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -102,6 +103,48 @@ def test_keep_persisted_pooled_bounds_slot_count(spark):
     sc._POOLS.pop("test_pool_extra", None)
     for df in sc._POOLS.pop("test_pool").values():
         df.unpersist(blocking=False)
+
+
+@pytest.mark.parametrize("n_threads, max_slots", [(2, 8), (8, 3)])
+def test_checkpoint_pool_takes_pins_from_many_threads(spark, n_threads, max_slots):
+    # Driver threads pin different plans into ONE checkpoint pool at the
+    # same moment (the ES publish's responses and situations dimensions
+    # share fixture_taxonomy_dim): each gets its own pin, and the pool keeps
+    # the most recent ones without passing its cap. More threads than cores
+    # and a short switch interval make the registry updates interleave.
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from srm_etl_spark.operators import session_cache as sc
+
+    base = spark.range(60).withColumn("k", F.col("id") % 10)
+    plans = [base.filter(F.col("k") == k).select("id") for k in range(n_threads)]
+    start = threading.Barrier(n_threads, timeout=60)
+
+    def pin(df):
+        start.wait()
+        return sc.keep_checkpointed_pooled(
+            df, "test_thread_pool", max_slots=max_slots, eager=False
+        )
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            pins = list(pool.map(pin, plans, timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    try:
+        assert len({id(p) for p in pins}) == n_threads
+        for k, p in enumerate(pins):
+            assert sorted(r.id for r in p.collect()) == list(range(k, 60, 10))
+        held = [ck for _orig, ck in sc._CKPT_POOLS["test_thread_pool"].values()]
+        assert len(held) == min(n_threads, max_slots)
+        assert {id(ck) for ck in held} <= {id(p) for p in pins}
+    finally:
+        for _orig, ck in sc._CKPT_POOLS.pop("test_thread_pool", {}).values():
+            sc.release_checkpoint(ck)
 
 
 def test_pack_sequences_budget_semantics(spark):

@@ -772,7 +772,12 @@ def run_derive(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     query rebuilds it cold. ``eager=False`` defers the stage compute to the
     first downstream action so callers that never touch a stage never pay
     for it. (Semantic anchor: the reference's own stage materialization,
-    to_dp.py:922-935.)"""
+    to_dp.py:922-935.)
+
+    The card surfaces are not in the map: their plans are large (~1 s of
+    driver-side construction) and most consumers read only the flat
+    stages, so a caller that needs one builds ``card_data(ft)`` or
+    ``card_data_full(ft)`` itself, once."""
     from ..operators.session_cache import keep_checkpointed_pooled  # noqa: PLC0415
 
     orgs = FIX.organizations(spark, sf_dir)
@@ -782,62 +787,4 @@ def run_derive(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     fb = keep_checkpointed_pooled(flat_branches(brs, locs, orgs), "derive_stages", eager=False)
     fs = flat_services(svcs, fb)
     ft = keep_checkpointed_pooled(flat_table(fs, fb), "derive_stages", eager=False)
-    # card_data / card_data_full plans are built ON ACCESS: their expression
-    # trees are large (nested array transforms, Arrow kernels — ~1 s of
-    # driver-side construction), and most consumers read only the flat
-    # stages. A plain dict would pay that second per run_derive call.
-    return _LazyStages(
-        {
-            "flat_branches": fb,
-            "flat_services": fs,
-            "flat_table": ft,
-        },
-        {
-            "card_data": lambda: card_data(ft),
-            "card_data_full": lambda: card_data_full(ft),
-        },
-    )
-
-
-class _LazyStages(dict):
-    """run_derive's stage map with deferred plan construction for the
-    expensive card surfaces. EVERY access path resolves the pending
-    builders — ``in``/``get``/``keys``/``items``/``values``/iteration/
-    ``len`` agree with ``[...]`` (a dict subclass that hid keys from
-    ``items()`` would silently skip stages for a future consumer — the r13
-    ADVICE contract gap); only the backing plans stay lazy (built on first
-    materializing access)."""
-
-    def __init__(self, eager: dict, builders: dict):
-        super().__init__(eager)
-        self._builders = builders
-
-    def _resolve(self, key):
-        if not dict.__contains__(self, key) and key in self._builders:
-            self[key] = self._builders.pop(key)()
-
-    def __getitem__(self, key):
-        self._resolve(key)
-        return super().__getitem__(key)
-
-    def __contains__(self, key):
-        return dict.__contains__(self, key) or key in self._builders
-
-    def __iter__(self):
-        yield from dict.__iter__(self)
-        yield from list(self._builders)
-
-    def __len__(self):
-        return dict.__len__(self) + len(self._builders)
-
-    def keys(self):
-        return list(self)
-
-    def get(self, key, default=None):
-        return self[key] if key in self else default
-
-    def items(self):
-        return [(k, self[k]) for k in self]
-
-    def values(self):
-        return [self[k] for k in self]
+    return {"flat_branches": fb, "flat_services": fs, "flat_table": ft}

@@ -178,9 +178,8 @@ def operator_publish_all(
     construction, its own dimension pins and its publish), and their Spark
     jobs share the executors. A serial chain of small jobs kept a 4-core
     host about half idle. The derive run, the card pin and every derive
-    stage a surface reads are built on the calling thread first
-    (``run_derive``'s lazy stage map is not thread-safe); autocomplete, the
-    longest publish, starts first, then cards. Every thread is joined before
+    stage a surface reads are built on the calling thread first;
+    autocomplete, the longest publish, starts first, then cards. Every thread is joined before
     this returns or raises; the first failure in index order is raised and
     any later one is logged."""
     from ..operators.session_cache import keep_checkpointed_pooled  # noqa: PLC0415
@@ -190,13 +189,13 @@ def operator_publish_all(
         autocomplete_input,
         city_bounds,
     )
-    from ..pipelines.derive import run_derive  # noqa: PLC0415
+    from ..pipelines.derive import card_data_full, run_derive  # noqa: PLC0415
     from ..sinks.es import publish  # noqa: PLC0415
 
-    st = run_derive(spark, sf_dir)
+    flat_table = run_derive(spark, sf_dir)["flat_table"]
     # lazy: an eager build here would run before, not beside, the fan-out
     cards = keep_checkpointed_pooled(
-        cards_api_surface(st["card_data_full"]).select(
+        cards_api_surface(card_data_full(flat_table)).select(
             "card_id", "card_key", "service_id", "service_name", "branch_city",
             "organization", "organization_name", "national_service",
             "card_score", "airtable_last_modified",
@@ -205,7 +204,6 @@ def operator_publish_all(
         "es_operator_cards",
         eager=False,
     )
-    flat_table = st["flat_table"]
     locs = FIX.locations(spark, sf_dir)
     # index -> (surface builder, id column), in the reference's order
     surfaces = {

@@ -44,7 +44,8 @@ from ..operators.upsert import staging_upsert
 from . import staging_fixtures as FIX
 
 
-# one full ETL run holds 9 live pins (3 merges + 3 post tables + fb/ft/cards);
+# one full ETL run holds 8 live pins (3 merges + the org and branch post
+# tables + fb/ft/cards);
 # the pool cap must exceed that or the LRU would evict a pin that a later
 # stage still reads through
 _ETL_POOL_SLOTS = 12
@@ -229,7 +230,8 @@ def run_full_etl(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     )
     post_orgs = _pin(post_orgs, "etl_stages", max_slots=_ETL_POOL_SLOTS, eager=False)
     post_brs = _pin(post_brs, "etl_stages", max_slots=_ETL_POOL_SLOTS, eager=False)
-    post_svcs = _pin(post_svcs, "etl_stages", max_slots=_ETL_POOL_SLOTS, eager=False)
+    # post_svcs needs no pin of its own: under manage_status=True it is only
+    # a column drop over the merge pin
 
     # the UNMODIFIED derive DAG over the post-upsert staging state — the
     # handoff the reference's scheduler performs implicitly via Airtable

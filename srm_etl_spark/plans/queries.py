@@ -1235,9 +1235,9 @@ def q35_derive_cards(spark, sf_dir):
     hash, byte-compatible with the reference) is excluded here because the
     oracle engine lacks sha1 — its determinism is pinned by unit tests; the
     preimage card_key is verified instead."""
-    from ..pipelines.derive import run_derive  # noqa: PLC0415
+    from ..pipelines.derive import card_data, run_derive  # noqa: PLC0415
 
-    cards = run_derive(spark, sf_dir)["card_data"]
+    cards = card_data(run_derive(spark, sf_dir)["flat_table"])
     return cards.drop("card_id").withColumn(
         "organization_branch_count", F.col("organization_branch_count").cast("long")
     )

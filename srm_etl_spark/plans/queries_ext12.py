@@ -468,7 +468,7 @@ _Q117_ID = __import__("itertools").count()
 
 def q117_late_data_drops(spark, sf_dir):
     """Watermark late-data semantics under a controlled 3-batch replay
-    (streaming/events.py:replay_in_batches): batch0 = on-time rows up to the
+    (streaming/events.py:replay): batch0 = on-time rows up to the
     70%-of-span cut (minus held-back stragglers), batch1 = the tail (advances
     the watermark to max(ts) - 30min, evicting every old window at its end),
     batch2 = the stragglers (event_id % 5 == 0 in the first 30% of the span)
@@ -481,7 +481,7 @@ def q117_late_data_drops(spark, sf_dir):
     eviction, not arrival time, is the drop boundary."""
     import datetime  # noqa: PLC0415
 
-    from ..streaming.events import replay_in_batches  # noqa: PLC0415
+    from ..streaming.events import recovery_axis, replay  # noqa: PLC0415
 
     ev = _t(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
     mm = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
@@ -524,21 +524,12 @@ def q117_late_data_drops(spark, sf_dir):
             )
         )
 
-    # SPARK_GRAFT_STREAM_RECOVERY=1 swaps in the kill-and-resume harness
-    # (stop after batch 2 of 3, restart from the checkpoint) — a standing
-    # invariance axis: the oracle is unchanged, so the hash gate proves the
+    # recovery axis: stop after batch 2 of 3 and restart from the
+    # checkpoint. The oracle is unchanged, so the hash gate proves the
     # recovered run emits exactly the uninterrupted run's set.
-    import os  # noqa: PLC0415
-
-    if os.environ.get("SPARK_GRAFT_STREAM_RECOVERY") == "1":
-        from ..streaming.events import replay_with_recovery  # noqa: PLC0415
-
-        out, _progress = replay_with_recovery(
-            spark, batches, build, f"q117_rec_{next(_Q117_ID)}", stop_after=2
-        )
-        return out
-    out, _progress = replay_in_batches(
-        spark, batches, build, f"q117_sink_{next(_Q117_ID)}"
+    out, _progress = replay(
+        spark, batches, build, f"q117_sink_{next(_Q117_ID)}",
+        stop_after=2 if recovery_axis() else None,
     )
     return out
 

@@ -489,15 +489,14 @@ def q137_meser_streaming_staging(spark, sf_dir):
     is in the fetch, soft-deleted meser rows INACTIVE, rows of OTHER staging
     sources preserved untouched across every version — one upsert
     implementation, two drivers (SURVEY §2.10)."""
-    import glob  # noqa: PLC0415
     import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import time as _time  # noqa: PLC0415
 
     from ..pipelines.meser import current_meser_staging  # noqa: PLC0415
     from ..session import scratch_dir  # noqa: PLC0415
     from ..streaming.events import (  # noqa: PLC0415
+        _staged_runs,
         latest_staging_version,
+        recovery_axis,
         stream_upsert_to_staging,
     )
 
@@ -506,9 +505,6 @@ def q137_meser_streaming_staging(spark, sf_dir):
     )
     fetched = t.select(F.col("organization_id").alias("id")).distinct()
     base = scratch_dir("srm_q137")
-    data = os.path.join(base, "stream")
-    os.makedirs(data)
-    now = _time.time()
     # Execute the transform lineage ONCE: all four batch files are
     # projections of `fetched`, so materialize it and carve the batches out
     # of the (org-registry-sized) re-read — previously every batch write
@@ -524,52 +520,25 @@ def q137_meser_streaming_staging(spark, sf_dir):
         fetched.filter(last.isin("7", "8", "9")),
         fetched,  # reconciliation snapshot — restores partial-feed statuses
     ]
-    staged = []
-    for i, b in enumerate(batches):
-        d = os.path.join(base, f"b{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(d)
-        (src,) = glob.glob(os.path.join(d, "*.parquet"))
-        staged.append(src)
-
-    def land(i: int) -> None:
-        dst = os.path.join(data, f"batch{i}.parquet")
-        shutil.copy(staged[i], dst)
-        os.utime(dst, (now - 100 * (len(batches) - i),) * 2)
-
     root = os.path.join(base, "staging")
     # bootstrap: the current staging table is version -1
     current_meser_staging(spark, sf_dir)["organizations"].write.parquet(
         os.path.join(root, "v=-1")
     )
 
-    def run_merge():
-        stream = (
-            spark.readStream.schema("id string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data)
-        )
+    def run_merge(stream, source_bytes):
         stream_upsert_to_staging(
             stream, root, key="id", source_id="meser",
-            checkpoint=os.path.join(base, "ckpt"),
-            source_bytes=sum(os.path.getsize(p) for p in staged),
+            checkpoint=os.path.join(base, "ckpt"), source_bytes=source_bytes,
         )
 
-    # SPARK_GRAFT_STREAM_RECOVERY=1: kill-and-resume for the foreachBatch
-    # MERGE deployment — the first run commits two partial-feed versions and
+    # recovery axis: the first run commits two partial-feed versions and
     # "crashes"; the resumed run's file log skips them and continues at the
     # NEXT batch_id, so the version chain (and the final reconciled table)
     # is identical to the uninterrupted run's.
-    if os.environ.get("SPARK_GRAFT_STREAM_RECOVERY") == "1":
-        for i in range(2):
-            land(i)
-        run_merge()
-        for i in range(2, len(batches)):
-            land(i)
-        run_merge()
-    else:
-        for i in range(len(batches)):
-            land(i)
-        run_merge()
+    _staged_runs(
+        spark, batches, base, run_merge, stop_after=2 if recovery_axis() else None
+    )
     final = latest_staging_version(root)
     if final is None or final.endswith("v=-1"):
         raise RuntimeError(

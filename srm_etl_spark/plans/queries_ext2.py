@@ -332,12 +332,13 @@ def q53_stream_tumbling(spark, sf_dir):
     aggregate → memory sink, then hand the sink table to the oracle compare.
     Proves the streaming plan computes exactly the batch answer (q32's
     premise) — complete output mode, availableNow trigger."""
-    import os  # noqa: PLC0415
-
     from ..streaming.events import (  # noqa: PLC0415
+        recovery_axis,
+        replay,
         run_to_memory,
         source_bytes_of,
         stream_events,
+        ts_ordered_halves,
     )
 
     name = f"q53_sink_{next(_SINK_IDS)}"
@@ -358,19 +359,13 @@ def q53_stream_tumbling(spark, sf_dir):
             )
         )
 
-    # SPARK_GRAFT_STREAM_RECOVERY=1: kill-and-resume invariance axis —
-    # complete-mode aggregate through the memory+checkpoint harness (run 2
-    # skips run 1's committed files, so the full table only reappears if the
-    # window state came back from the state store). Oracle unchanged.
-    if os.environ.get("SPARK_GRAFT_STREAM_RECOVERY") == "1":
-        from ..streaming.events import (  # noqa: PLC0415
-            replay_with_recovery_memory,
-            ts_ordered_halves,
-        )
-
+    # recovery axis: the resumed run skips run 1's committed files, so the
+    # full table only reappears if the window state came back from the
+    # state store. Oracle unchanged.
+    if recovery_axis():
         ev = _t(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
-        out, _progress = replay_with_recovery_memory(
-            spark, ts_ordered_halves(ev), build, name, mode="complete"
+        out, _progress = replay(
+            spark, ts_ordered_halves(ev), build, name, mode="complete", stop_after=1
         )
         return out
     src = f"{sf_dir}/events.parquet"

@@ -292,7 +292,7 @@ def q157_stream_dedup(spark, sf_dir):
     """
     import datetime  # noqa: PLC0415
 
-    from ..streaming.events import replay_in_batches, streaming_dedup  # noqa: PLC0415
+    from ..streaming.events import recovery_axis, replay, streaming_dedup  # noqa: PLC0415
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -325,22 +325,13 @@ def q157_stream_dedup(spark, sf_dir):
         ev.filter(F.col("ts") > F.lit(cut1)).unionByName(dup_a),
         dup_b,
     ]
-    # SPARK_GRAFT_STREAM_RECOVERY=1: kill-and-resume invariance axis (see
-    # q117) — dedup state resumes from the checkpointed state store, so the
-    # suppress/re-emit decisions must be identical to the uninterrupted run.
-    import os  # noqa: PLC0415
-
-    if os.environ.get("SPARK_GRAFT_STREAM_RECOVERY") == "1":
-        from ..streaming.events import replay_with_recovery  # noqa: PLC0415
-
-        out, _progress = replay_with_recovery(
-            spark, batches, lambda s: streaming_dedup(s, "30 minutes"),
-            f"q157_rec_{next(_Q157_ID)}", stop_after=2,
-        )
-    else:
-        out, _progress = replay_in_batches(
-            spark, batches, lambda s: streaming_dedup(s, "30 minutes"), f"q157_sink_{next(_Q157_ID)}"
-        )
+    # recovery axis (see q117): dedup state resumes from the checkpointed
+    # state store, so the suppress/re-emit decisions must be identical to
+    # the uninterrupted run's.
+    out, _progress = replay(
+        spark, batches, lambda s: streaming_dedup(s, "30 minutes"),
+        f"q157_sink_{next(_Q157_ID)}", stop_after=2 if recovery_axis() else None,
+    )
     return out.select(
         "event_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),

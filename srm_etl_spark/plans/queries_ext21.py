@@ -61,13 +61,14 @@ def q158_derive_staged(spark, sf_dir):
         autocomplete_input,
         city_bounds,
     )
-    from ..pipelines.derive import run_derive  # noqa: PLC0415
+    from ..pipelines.derive import card_data, run_derive  # noqa: PLC0415
 
     orgs, locs = FIX.organizations(spark, sf_dir), FIX.locations(spark, sf_dir)
     brs, svcs = FIX.branches(spark, sf_dir), FIX.services(spark, sf_dir)
     st = run_derive(spark, sf_dir)
     fb, fs = st["flat_branches"], st["flat_services"]
-    ft, cards = st["flat_table"], st["card_data"]
+    ft = st["flat_table"]
+    cards = card_data(ft)
     ac = autocomplete_corpus(autocomplete_input(ft), city_bounds(locs))
 
     def phase(df, name, key, *sig_cols):
@@ -223,13 +224,13 @@ def q159_publish_fanout(spark, sf_dir):
     The persist is the point: at 100 TB the derive DAG runs once and three
     sinks stream from the cached surface — not three recomputations."""
     from ..operators.session_cache import keep_persisted  # noqa: PLC0415
-    from ..pipelines.derive import run_derive  # noqa: PLC0415
+    from ..pipelines.derive import card_data, run_derive  # noqa: PLC0415
     from ..sinks.es import to_es_actions  # noqa: PLC0415
     from ..sinks.files import sitemap_documents  # noqa: PLC0415
     from ..sinks.jdbc import index_ddl  # noqa: PLC0415
 
     stages = run_derive(spark, sf_dir)
-    cards = stages["card_data"]
+    cards = card_data(stages["flat_table"])
     # organization_kind lives on flat_branches (branch_id is its PK); the
     # reference's card dump carries it (to_sql.py:37 indexes it), so the
     # publish surface joins it back — a broadcast of a 2-column dim slice.

@@ -42,7 +42,7 @@ def q161_es_publish_surfaces(spark, sf_dir):
         autocomplete_input,
         city_bounds,
     )
-    from ..pipelines.derive import run_derive  # noqa: PLC0415
+    from ..pipelines.derive import card_data_full, run_derive  # noqa: PLC0415
     from ..pipelines.es_publish import (  # noqa: PLC0415
         autocomplete_publish,
         cards_api_surface,
@@ -53,7 +53,7 @@ def q161_es_publish_surfaces(spark, sf_dir):
 
     st = run_derive(spark, sf_dir)
     surface = keep_checkpointed_pooled(
-        cards_api_surface(st["card_data_full"]).select(
+        cards_api_surface(card_data_full(st["flat_table"])).select(
             "card_key", "card_score", "airtable_last_modified", "service_name",
             "branch_city", "organization", "response_ids", "situation_ids",
         ),
@@ -275,7 +275,7 @@ def q162_mapbox_geo_flow(spark, sf_dir):
     (U2), the per-card ES points projection and the 4-column clusters
     subset — all four phase-labeled full row-sets in one result."""
     from ..operators.session_cache import keep_persisted  # noqa: PLC0415
-    from ..pipelines.derive import run_derive  # noqa: PLC0415
+    from ..pipelines.derive import card_data_full, run_derive  # noqa: PLC0415
     from ..pipelines.mapbox import (  # noqa: PLC0415
         geo_data_surface,
         geo_point_records,
@@ -283,7 +283,7 @@ def q162_mapbox_geo_flow(spark, sf_dir):
     )
 
     recs = keep_persisted(
-        geo_point_records(run_derive(spark, sf_dir)["card_data_full"]),
+        geo_point_records(card_data_full(run_derive(spark, sf_dir)["flat_table"])),
         "mapbox_records",
     )
     pts = points_surface(recs)

@@ -192,13 +192,14 @@ def q60_stream_running_totals(spark, sf_dir):
     update. Values are scaled to integer micros BEFORE the stream so the
     Python-side accumulation is exact and order-independent (float sums in
     state would drift from any SQL oracle)."""
-    import os  # noqa: PLC0415
-
     from ..streaming.events import (  # noqa: PLC0415
+        recovery_axis,
+        replay,
         run_to_memory,
         running_user_totals,
         source_bytes_of,
         stream_events,
+        ts_ordered_halves,
     )
 
     name = f"q60_sink_{next(_Q60_SINK_IDS)}"
@@ -208,21 +209,16 @@ def q60_stream_running_totals(spark, sf_dir):
             s.withColumn("value", F.round(F.col("value") * 1000000))
         )
 
-    # SPARK_GRAFT_STREAM_RECOVERY=1: kill-and-resume for the CUSTOM stateful
-    # operator (applyInPandasWithState) — post-crash emissions must carry the
+    # recovery axis, for the CUSTOM stateful operator
+    # (applyInPandasWithState): post-crash emissions must carry the
     # pre-crash accumulated (n, total) from the recovered state store; the
-    # update-mode harness unions both runs' snapshots and the max_by(n_events)
-    # reduction below picks each user's latest update either way.
-    if os.environ.get("SPARK_GRAFT_STREAM_RECOVERY") == "1":
-        from ..streaming.events import (  # noqa: PLC0415
-            replay_with_recovery_memory,
-            ts_ordered_halves,
-        )
-
+    # update-mode replay returns both runs' emissions and the
+    # max_by(n_events) reduction below picks each user's latest update.
+    if recovery_axis():
         ev = _t(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
-        sink, _progress = replay_with_recovery_memory(
+        sink, _progress = replay(
             spark, ts_ordered_halves(ev), build, name, mode="update",
-            python_stateful=True,
+            stop_after=1, python_stateful=True,
         )
     else:
         src = f"{sf_dir}/events.parquet"

@@ -135,13 +135,14 @@ def q64_stream_join(spark, sf_dir):
     deployment sizes this to the cluster, not the default). The memory sink is
     reduced to the tiny per-user aggregate and dropped before returning, so
     repeated invocations in one session hold no sink state."""
-    import os  # noqa: PLC0415
-
     from ..streaming.events import (  # noqa: PLC0415
         interval_join,
+        recovery_axis,
+        replay,
         run_to_memory,
         source_bytes_of,
         stream_events,
+        ts_ordered_halves,
     )
 
     name = "q64_sink"
@@ -160,25 +161,18 @@ def q64_stream_join(spark, sf_dir):
             max_delay="30 minutes", watermark="60 days",
         )
 
-    recovery = os.environ.get("SPARK_GRAFT_STREAM_RECOVERY") == "1"
+    recovery = recovery_axis()
     prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         if recovery:
-            # kill-and-resume for STREAM-STREAM JOIN state: the buffered
-            # rows of both sides must come back from the state store for
-            # cross-half (click in run 1, purchase in run 2) pairs to emit.
-            # Append mode -> the parquet-sink harness (exactly-once commit
-            # log across the restart).
-            from ..streaming.events import (  # noqa: PLC0415
-                replay_with_recovery,
-                ts_ordered_halves,
-            )
-
+            # STREAM-STREAM JOIN state: the buffered rows of both sides must
+            # come back from the state store for cross-half (click in run 1,
+            # purchase in run 2) pairs to emit.
             ev = _t(spark, sf_dir, "events").withColumn(
                 "ts", F.col("ts").cast("timestamp")
             )
-            sink, _progress = replay_with_recovery(
+            sink, _progress = replay(
                 spark, ts_ordered_halves(ev), build, name, stop_after=1
             )
         else:
@@ -205,7 +199,7 @@ def q64_stream_join(spark, sf_dir):
 
     out_path = scratch_dir("srm_q64_agg") + "/agg"
     agg.write.mode("overwrite").parquet(out_path)
-    if not recovery:  # the recovery harness has no memory-sink view to drop
+    if not recovery:  # the replay has no memory-sink view to drop
         spark.catalog.dropTempView(name)
     return spark.read.parquet(out_path)
 

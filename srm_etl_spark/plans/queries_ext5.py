@@ -301,13 +301,14 @@ def q73_stream_enrich(spark, sf_dir):
     only the aggregate, never the joined stream. The oracle runs the same
     join+aggregate as batch SQL; equality proves the streaming plan computes
     the batch answer."""
-    import os  # noqa: PLC0415
-
     from ..streaming.events import (  # noqa: PLC0415
+        recovery_axis,
+        replay,
         run_to_memory,
         source_bytes_of,
         stream_events,
         stream_static_enrich,
+        ts_ordered_halves,
     )
 
     dim = spark.createDataFrame(
@@ -325,18 +326,13 @@ def q73_stream_enrich(spark, sf_dir):
             ),
         )
 
-    # SPARK_GRAFT_STREAM_RECOVERY=1: kill-and-resume — the stream-static
-    # join is stateless, but the downstream complete-mode aggregate's state
-    # must survive the restart (run 2 only reads the second half's files).
-    if os.environ.get("SPARK_GRAFT_STREAM_RECOVERY") == "1":
-        from ..streaming.events import (  # noqa: PLC0415
-            replay_with_recovery_memory,
-            ts_ordered_halves,
-        )
-
+    # recovery axis: the stream-static join is stateless, but the
+    # downstream complete-mode aggregate's state must survive the restart
+    # (run 2 only reads the second half's files).
+    if recovery_axis():
         ev = _t(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
-        out, _progress = replay_with_recovery_memory(
-            spark, ts_ordered_halves(ev), build, "q73_rec", mode="complete"
+        out, _progress = replay(
+            spark, ts_ordered_halves(ev), build, "q73_rec", mode="complete", stop_after=1
         )
         return out
     src = f"{sf_dir}/events.parquet"

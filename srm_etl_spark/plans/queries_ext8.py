@@ -164,12 +164,13 @@ def q88_stream_sessions(spark, sf_dir):
     sessionize operator (q17), proving the stateful session merge computes
     exactly the batch gap-islands answer. Decimal-cast sum for cross-engine
     exactness (the q53 discipline)."""
-    import os  # noqa: PLC0415
-
     from ..streaming.events import (  # noqa: PLC0415
+        recovery_axis,
+        replay,
         run_to_memory,
         source_bytes_of,
         stream_events,
+        ts_ordered_halves,
     )
 
     name = f"q88_sink_{next(_SINK_IDS)}"
@@ -191,18 +192,13 @@ def q88_stream_sessions(spark, sf_dir):
             )
         )
 
-    # SPARK_GRAFT_STREAM_RECOVERY=1: kill-and-resume for SESSION-WINDOW
-    # state — open sessions spanning the crash point must merge correctly
-    # from the recovered state store (run 2 only sees the later half).
-    if os.environ.get("SPARK_GRAFT_STREAM_RECOVERY") == "1":
-        from ..streaming.events import (  # noqa: PLC0415
-            replay_with_recovery_memory,
-            ts_ordered_halves,
-        )
-
+    # recovery axis, for SESSION-WINDOW state: open sessions spanning the
+    # crash point must merge correctly from the recovered state store (run
+    # 2 only sees the later half).
+    if recovery_axis():
         ev = _t(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
-        out, _progress = replay_with_recovery_memory(
-            spark, ts_ordered_halves(ev), build, name, mode="complete"
+        out, _progress = replay(
+            spark, ts_ordered_halves(ev), build, name, mode="complete", stop_after=1
         )
         return out
     src = f"{sf_dir}/events.parquet"

@@ -14,7 +14,6 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def batched(rows: Iterable[dict], size: int) -> Iterator[list[dict]]:
@@ -109,20 +108,6 @@ def ckan_backup_package(
             for rname, df in resources.items()
         ],
     }
-
-
-def es_bulk_lines(df: DataFrame, index: str, id_col: str) -> DataFrame:
-    """K3 helper: the `_bulk` NDJSON line pairs (action + source) as a
-    DataFrame — built distributed, written by any text sink."""
-    action = F.to_json(
-        F.struct(
-            F.struct(
-                F.lit(index).alias("_index"), F.col(id_col).alias("_id")
-            ).alias("index")
-        )
-    )
-    source = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-    return df.select(F.concat_ws("\n", action, source).alias("bulk"))
 
 
 def mapbox_upload_tileset(

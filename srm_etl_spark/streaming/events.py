@@ -200,28 +200,18 @@ def interval_join(
     return l.join(r, cond, "inner").drop(r[key])
 
 
-def _dir_bytes(path: str) -> int:
+def source_bytes_of(path: str) -> int:
     """Total size of the regular files at ``path`` — a single file or one
-    flat directory (the replay source dirs are flat)."""
+    flat directory — the value callers hand to :func:`run_to_memory` so
+    state partitioning can be derived from input volume (guide §2)."""
     import os  # noqa: PLC0415
 
     try:
         if os.path.isfile(path):
             return os.path.getsize(path)
-        total = 0
-        for entry in os.scandir(path):
-            if entry.is_file():
-                total += entry.stat().st_size
+        return sum(e.stat().st_size for e in os.scandir(path) if e.is_file())
     except OSError:
         return 0
-    return total
-
-
-def source_bytes_of(path: str) -> int:
-    """Public size probe for a replay source (file or flat dir) — the value
-    callers hand to :func:`run_to_memory` / the replay harnesses so state
-    partitioning can be derived from input volume (guide §2)."""
-    return _dir_bytes(path)
 
 
 @_contextmanager
@@ -459,165 +449,14 @@ def running_user_totals(events: DataFrame, watermark: str = "2 hours") -> DataFr
     )
 
 
-def replay_in_batches(
-    spark: SparkSession,
-    batches: list[DataFrame],
-    build,
-    name: str,
-    mode: str = "append",
-    timeout_sec: int = 300,
-):
-    """Replay a controlled sequence of micro-batches through a streaming plan.
-
-    Each batch DataFrame is written as ONE parquet file into a scratch source
-    dir with explicitly spaced modification times (the file source orders by
-    mtime), then streamed with ``maxFilesPerTrigger=1`` + ``availableNow`` —
-    one micro-batch per file, in the given order, plus Spark's final no-data
-    batch that advances the watermark and finalizes eligible state. ``build``
-    maps the source stream to the streaming plan; the result is drained
-    through a memory sink, copied to a scratch parquet (the q64 discipline:
-    the sink view is dropped so repeated replays hold no driver state) and
-    returned as (lazy result DataFrame, query progress list).
-
-    This is the harness for semantics only multi-batch execution exposes —
-    watermark advancement, APPEND-mode finalization, late-row drops against
-    evicted state. On a cluster the same plan runs against a live source;
-    nothing here is local-mode-specific except the scratch paths.
-    """
-    import glob as _glob  # noqa: PLC0415
+def recovery_axis() -> bool:
+    """Is the crash-recovery invariance axis on (``SPARK_GRAFT_STREAM_RECOVERY
+    =1``)? Every streaming query then replays killed-and-resumed: stopped
+    after a committed micro-batch and restarted from its checkpoint. The
+    oracles are unchanged, so a hash MATCH certifies the recovered run."""
     import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    from ..session import scratch_dir  # noqa: PLC0415
-    import time as _time  # noqa: PLC0415
 
-    base = scratch_dir(f"srm_replay_{name}")
-    data = os.path.join(base, "stream")
-    os.makedirs(data)
-    now = _time.time()
-    schema = batches[0].schema
-    for i, b in enumerate(batches):
-        d = os.path.join(base, f"b{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(d)
-        (src,) = _glob.glob(os.path.join(d, "*.parquet"))
-        dst = os.path.join(data, f"batch{i}.parquet")
-        shutil.copy(src, dst)
-        # spaced mtimes pin the batch order however fast the writes ran
-        os.utime(dst, (now - 100 * (len(batches) - i), now - 100 * (len(batches) - i)))
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(data)
-    with scaled_state_partitions(spark, _dir_bytes(data)):
-        q = (
-            build(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            # a partial sink snapshot would return silently wrong results —
-            # stop the straggling query and fail loudly instead
-            q.stop()
-            raise RuntimeError(
-                f"replay_in_batches[{name}]: availableNow replay did not finish "
-                f"within {timeout_sec}s"
-            )
-    out_path = os.path.join(base, "result")
-    spark.table(name).write.mode("overwrite").parquet(out_path)
-    progress = list(q.recentProgress)
-    spark.catalog.dropTempView(name)
-    return spark.read.parquet(out_path), progress
-
-
-def replay_with_recovery(
-    spark: SparkSession,
-    batches: list[DataFrame],
-    build,
-    name: str,
-    stop_after: int = 2,
-    mode: str = "append",
-    timeout_sec: int = 300,
-):
-    """Kill-and-resume twin of :func:`replay_in_batches`: certifies that a
-    checkpointed streaming plan emits the SAME set whether it runs
-    uninterrupted or is stopped mid-replay and restarted.
-
-    Run 1 sees only the first ``stop_after`` batch files — its availableNow
-    trigger drains what exists (watermark advanced, eligible state finalized)
-    and terminates, standing in for a crash/redeploy after those
-    micro-batches committed. The remaining files then land in the source dir
-    and a SECOND query restarts from the same checkpoint: the file source's
-    seen-files log skips the processed batches, and watermark + operator
-    state resume from the state store — late-drop and dedup decisions are
-    identical to the uninterrupted run's, because availableNow advances the
-    watermark the same way a no-more-data lull does. Output flows through a
-    parquet FILE sink whose commit log is tied to the checkpoint's batch ids,
-    so rows are exactly-once across the restart. Returns
-    (lazy result DataFrame, [run1 progress, run2 progress]).
-    """
-    import glob as _glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import time as _time  # noqa: PLC0415
-
-    from ..session import scratch_dir  # noqa: PLC0415
-
-    if not 0 < stop_after < len(batches):
-        raise ValueError("stop_after must split the batch list")
-    base = scratch_dir(f"srm_recover_{name}")
-    data = os.path.join(base, "stream")
-    out_path = os.path.join(base, "result")
-    ckpt = os.path.join(base, "checkpoint")
-    os.makedirs(data)
-    now = _time.time()
-    schema = batches[0].schema
-    staged = []
-    for i, b in enumerate(batches):
-        d = os.path.join(base, f"b{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(d)
-        (src,) = _glob.glob(os.path.join(d, "*.parquet"))
-        staged.append(src)
-
-    def land(i: int) -> None:
-        dst = os.path.join(data, f"batch{i}.parquet")
-        shutil.copy(staged[i], dst)
-        t = now - 100 * (len(batches) - i)  # same order pin as replay_in_batches
-        os.utime(dst, (t, t))
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data)
-        )
-        q = (
-            build(stream)
-            .writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", ckpt)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise RuntimeError(
-                f"replay_with_recovery[{name}]: run did not finish within {timeout_sec}s"
-            )
-        return list(q.recentProgress)
-
-    # one size for BOTH runs: run 1's first micro-batch fixes the state
-    # layout in the checkpoint, so the resumed run must (and does) see the
-    # same derived partitioning — computed from the full staged volume
-    src_bytes = sum(os.path.getsize(p) for p in staged)
-    for i in range(stop_after):
-        land(i)
-    with scaled_state_partitions(spark, src_bytes):
-        p1 = run()  # "crash" after the first stop_after micro-batches committed
-    for i in range(stop_after, len(batches)):
-        land(i)
-    with scaled_state_partitions(spark, src_bytes):
-        p2 = run()  # resume from the checkpoint
-    return spark.read.parquet(out_path), [p1, p2]
+    return os.environ.get("SPARK_GRAFT_STREAM_RECOVERY") == "1"
 
 
 def ts_ordered_halves(df: DataFrame, ts_col: str = "ts") -> list[DataFrame]:
@@ -634,112 +473,142 @@ def ts_ordered_halves(df: DataFrame, ts_col: str = "ts") -> list[DataFrame]:
     ]
 
 
-def replay_with_recovery_memory(
-    spark: SparkSession,
-    batches: list[DataFrame],
-    build,
-    name: str,
-    stop_after: int = 1,
-    mode: str = "complete",
-    timeout_sec: int = 300,
-    python_stateful: bool = False,
-):
-    """Kill-and-resume harness for output modes a file sink can't carry
-    (``complete`` / ``update`` — Spark's file sink is append-only): memory
-    sink + a SHARED checkpoint across the two runs, each run's sink snapshot
-    written to scratch parquet.
+def _staged_runs(
+    spark: SparkSession, batches: list[DataFrame], base: str, run,
+    stop_after: int | None = None,
+) -> None:
+    """Stage each batch DataFrame as ONE parquet file, land the files in
+    order into ``base/stream`` and call ``run(stream, source_bytes)`` on a
+    ``maxFilesPerTrigger=1`` file-source stream over them — one micro-batch
+    per file, in the given order.
 
-    The recovery certification is real despite the per-run sink: run 2's
-    file-source log (from the checkpoint) SKIPS run 1's already-committed
-    batches, so its output is only correct if the operator state also came
-    back from the state store —
-
-    - ``complete`` → memory sink (Spark allows checkpoint recovery for it in
-      complete mode — the sink is rebuilt every trigger); run 2's final
-      table IS the full aggregate iff state recovered (a lost state store
-      with a kept file log would aggregate only the post-crash files).
-    - ``update`` → the memory sink canNOT resume from a checkpoint
-      ("query does not support recovering"), so each micro-batch's
-      emissions flow through a fault-tolerant ``foreachBatch`` parquet
-      append instead; the accumulated rows across both runs are returned —
-      the caller's latest-per-key reduction sees post-crash emissions that
-      must carry the pre-crash accumulated state.
-
-    Returns (lazy result DataFrame, [run1 progress, run2 progress]).
-    """
-    import glob as _glob  # noqa: PLC0415
+    The file source orders by mtime, so each landed file gets an explicitly
+    spaced modification time, whatever the speed of the writes.
+    ``stop_after=None`` lands every file and runs once; ``stop_after=k``
+    lands the first k, runs (the "crash" after k committed micro-batches),
+    lands the rest and runs again — ``run`` must resume from a checkpoint
+    shared by both runs. ``source_bytes`` is the whole staged volume in
+    every run: the first micro-batch fixes the state layout in the
+    checkpoint, so the resumed run must derive the same partitioning."""
+    import glob  # noqa: PLC0415
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
-    import time as _time  # noqa: PLC0415
+    import time  # noqa: PLC0415
 
-    from ..session import scratch_dir  # noqa: PLC0415
-
-    if not 0 < stop_after < len(batches):
+    n = len(batches)
+    if stop_after is not None and not 0 < stop_after < n:
         raise ValueError("stop_after must split the batch list")
-    if mode not in ("complete", "update"):
-        raise ValueError("use replay_with_recovery (parquet sink) for append mode")
-    base = scratch_dir(f"srm_recover_mem_{name}")
     data = os.path.join(base, "stream")
-    ckpt = os.path.join(base, "checkpoint")
     os.makedirs(data)
-    now = _time.time()
-    schema = batches[0].schema
     staged = []
     for i, b in enumerate(batches):
         d = os.path.join(base, f"b{i}")
         b.coalesce(1).write.mode("overwrite").parquet(d)
-        (src,) = _glob.glob(os.path.join(d, "*.parquet"))
+        (src,) = glob.glob(os.path.join(d, "*.parquet"))
         staged.append(src)
-
-    def land(i: int) -> None:
-        dst = os.path.join(data, f"batch{i}.parquet")
-        shutil.copy(staged[i], dst)
-        t = now - 100 * (len(batches) - i)
-        os.utime(dst, (t, t))
-
-    upd_path = os.path.join(base, "updates")
-
-    def run(run_idx: int):
-        sink = f"{name}_r{run_idx}"
+    source_bytes = sum(os.path.getsize(p) for p in staged)
+    now = time.time()
+    landed = 0
+    for cut in ([n] if stop_after is None else [stop_after, n]):
+        for i in range(landed, cut):
+            dst = os.path.join(data, f"batch{i}.parquet")
+            shutil.copy(staged[i], dst)
+            os.utime(dst, (now - 100 * (n - i),) * 2)
+        landed = cut
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(batches[0].schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(data)
         )
-        writer = build(stream).writeStream
-        if mode == "complete":
-            writer = writer.format("memory").queryName(sink)
+        run(stream, source_bytes)
+
+
+def _await(q, what: str, timeout_sec: int) -> None:
+    """The one bounded wait on a replay query: one that has not finished
+    within ``timeout_sec`` is stopped and the replay fails loudly — a
+    partial sink would return silently wrong results."""
+    finished = False
+    try:
+        finished = timeout_sec > 0 and q.awaitTermination(timeout_sec)
+    finally:
+        if not finished:
+            q.stop()
+    if not finished:
+        raise RuntimeError(f"{what}: availableNow replay did not finish within {timeout_sec}s")
+
+
+def replay(
+    spark: SparkSession,
+    batches: list[DataFrame],
+    build,
+    name: str,
+    mode: str = "append",
+    stop_after: int | None = None,
+    python_stateful: bool = False,
+    timeout_sec: int = 300,
+):
+    """Replay a controlled sequence of micro-batches through a streaming plan.
+
+    Each batch is staged as one file and streamed with ``availableNow`` —
+    one micro-batch per file, in the given order, plus Spark's final
+    no-data batch that advances the watermark and finalizes eligible state.
+    ``build`` maps the source stream to the streaming plan. This is the
+    harness for semantics only multi-batch execution exposes — watermark
+    advancement, APPEND-mode finalization, late-row drops against evicted
+    state — and for the crash-recovery axis.
+
+    ``stop_after=k`` stops the query after batch k and restarts it from the
+    same checkpoint once the remaining files have landed: the file source's
+    seen-files log skips the processed batches, and watermark + operator
+    state resume from the state store, so the result equals the
+    uninterrupted run's only if state came back. The output mode alone
+    chooses the sink, the one the recovery axis certifies for that mode:
+
+    - ``append`` → a checkpointed parquet FILE sink; its commit log is tied
+      to the checkpoint's batch ids, so rows are exactly-once across the
+      restart;
+    - ``complete`` → a memory sink (Spark lets it resume from a checkpoint
+      in complete mode), snapshotted to scratch parquet after every run; the
+      last run's table is the full aggregate;
+    - ``update`` → the memory sink cannot resume in update mode, so every
+      micro-batch's emissions are appended to parquet through
+      ``foreachBatch``; the result is the emissions of every run.
+
+    ``python_stateful`` flags a Python-stateful plan for
+    :func:`scaled_state_partitions`. Returns (lazy result DataFrame,
+    progress): ``progress`` is every run's ``recentProgress`` in order;
+    batch ids continue across the restart."""
+    import os  # noqa: PLC0415
+
+    from ..session import scratch_dir  # noqa: PLC0415
+
+    base = scratch_dir(f"srm_replay_{name}")
+    ckpt = os.path.join(base, "checkpoint")
+    out = os.path.join(base, "result")
+    progress = []
+
+    def run(stream: DataFrame, source_bytes: int) -> None:
+        writer = (
+            build(stream).writeStream.outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+        )
+        if mode == "append":
+            writer = writer.format("parquet").option("path", out)
+        elif mode == "complete":
+            writer = writer.format("memory").queryName(name)
         else:
             writer = writer.foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(upd_path)
+                lambda df, _bid: df.write.mode("append").parquet(out)
             )
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise RuntimeError(
-                f"replay_with_recovery_memory[{name}]: run {run_idx} did not "
-                f"finish within {timeout_sec}s"
-            )
-        if mode != "complete":
-            return spark.read.parquet(upd_path), list(q.recentProgress)
-        snap = os.path.join(base, f"result_r{run_idx}")
-        spark.table(sink).write.mode("overwrite").parquet(snap)
-        spark.catalog.dropTempView(sink)
-        return spark.read.parquet(snap), list(q.recentProgress)
+        with scaled_state_partitions(spark, source_bytes, python_stateful=python_stateful):
+            q = writer.start()
+            _await(q, f"replay[{name}]", timeout_sec)
+        progress.extend(q.recentProgress)
+        if mode == "complete":
+            # the sink view is dropped so repeated replays hold no driver state
+            spark.table(name).write.mode("overwrite").parquet(out)
+            spark.catalog.dropTempView(name)
 
-    # same one-size-for-both-runs rule as replay_with_recovery
-    src_bytes = sum(os.path.getsize(p) for p in staged)
-    for i in range(stop_after):
-        land(i)
-    with scaled_state_partitions(spark, src_bytes, python_stateful=python_stateful):
-        _r1, p1 = run(1)  # "crash" after the first stop_after micro-batches
-    for i in range(stop_after, len(batches)):
-        land(i)
-    with scaled_state_partitions(spark, src_bytes, python_stateful=python_stateful):
-        r2, p2 = run(2)  # resume from the checkpoint
-    return r2, [p1, p2]
+    _staged_runs(spark, batches, base, run, stop_after)
+    return spark.read.parquet(out), progress

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from srm_etl_spark.sinks.files import write_datapackage
 from srm_etl_spark.sinks.jdbc import index_ddl
-from srm_etl_spark.sinks.rest import ckan_dataset_payload, es_bulk_lines, upsert_payloads
+from srm_etl_spark.sinks.rest import ckan_dataset_payload, upsert_payloads
 from srm_etl_spark.sources.connectors import (
     dedup_headers,
     flatten_taxonomy,
@@ -168,14 +168,6 @@ def test_ckan_payload(spark):
         {"id": "id", "type": "bigint"},
         {"id": "name", "type": "string"},
     ]
-
-
-def test_es_bulk_lines(spark):
-    df = spark.createDataFrame([(1, "x")], "id long, name string")
-    line = es_bulk_lines(df, "cards", "id").collect()[0].bulk
-    action, source = line.split("\n")
-    assert json.loads(action) == {"index": {"_index": "cards", "_id": 1}}
-    assert json.loads(source) == {"id": 1, "name": "x"}
 
 
 def test_write_datapackage(spark, tmp_path):

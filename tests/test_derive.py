@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from srm_etl_spark.functions.hashing import hasher_py
-from srm_etl_spark.pipelines.derive import run_derive
+from srm_etl_spark.pipelines.derive import card_data, run_derive
 
 
 @pytest.fixture(scope="module")
@@ -23,7 +23,7 @@ def stages(spark, sf_dir):
 
 
 def test_card_id_matches_reference_hasher(stages):
-    rows = stages["card_data"].select("card_id", "branch_id", "service_id").limit(50).collect()
+    rows = card_data(stages["flat_table"]).select("card_id", "branch_id", "service_id").limit(50).collect()
     assert rows
     for r in rows:
         assert r.card_id == hasher_py(r.branch_id, r.service_id)
@@ -53,7 +53,7 @@ def test_flat_table_pk_unique(stages):
 
 
 def test_card_taxonomy_parent_expansion(stages):
-    rows = stages["card_data"].select("response_ids").limit(20).collect()
+    rows = card_data(stages["flat_table"]).select("response_ids").limit(20).collect()
     for r in rows:
         ids = r.response_ids.split(",")
         # every 3-segment tag must ride with its 2-segment parent, sorted
@@ -182,33 +182,3 @@ def test_card_search_slot_never_leaks_across_sf_dirs(spark):
     release_all(spark)
     big_fresh = card_search(spark, "/root/testdata/sf0.01")
     assert big_rows == sorted(r["card_key"] for r in big_fresh.collect())
-
-
-def test_lazy_stages_dict_contract(spark):
-    """Every dict access path must see the lazily-built card surfaces:
-    'in', get, keys/items/values, iteration, len, dict-unpacking (the r13
-    ADVICE contract gap — __getitem__-only laziness hid stages from
-    items())."""
-    from srm_etl_spark.pipelines.derive import _LazyStages
-
-    built = []
-
-    def mk(name):
-        def b():
-            built.append(name)
-            return name.upper()
-        return b
-
-    stages = _LazyStages({"a": 1, "b": 2}, {"card": mk("card"), "full": mk("full")})
-    assert "card" in stages and "missing" not in stages
-    assert len(stages) == 4
-    assert sorted(stages) == ["a", "b", "card", "full"]
-    assert sorted(stages.keys()) == ["a", "b", "card", "full"]
-    assert stages.get("card") == "CARD"
-    assert stages.get("missing", 9) == 9
-    items = dict(stages.items())
-    assert items == {"a": 1, "b": 2, "card": "CARD", "full": "FULL"}
-    assert sorted(map(str, stages.values())) == ["1", "2", "CARD", "FULL"]
-    assert {**stages} == items
-    # each builder ran exactly once despite the many access paths
-    assert sorted(built) == ["card", "full"]

@@ -142,9 +142,9 @@ def test_card_search_on_partitioned_write_prunes_partitions(spark, tmp_path):
     # the written-table twin of q36: card_data published partitioned by city,
     # then searched — the city predicate must become a PartitionFilter (whole
     # directories skipped), the 100 TB story for a precomputed card table
-    from srm_etl_spark.pipelines.derive import run_derive
+    from srm_etl_spark.pipelines.derive import card_data, run_derive
 
-    cards = run_derive(spark, SF)["card_data"]
+    cards = card_data(run_derive(spark, SF)["flat_table"])
     path = str(tmp_path / "card_data_by_city")
     cards.write.mode("overwrite").partitionBy("branch_city").parquet(path)
 

@@ -69,7 +69,7 @@ def test_streaming_dedup_boundaries(spark):
     key re-emits (q157's batch2)."""
     import datetime
 
-    from srm_etl_spark.streaming.events import replay_in_batches
+    from srm_etl_spark.streaming.events import replay
 
     t0 = datetime.datetime(2026, 1, 1)
 
@@ -83,7 +83,7 @@ def test_streaming_dedup_boundaries(spark):
     b1 = spark.createDataFrame([ev(2, 135), ev(1, 0), ev(3, 140)], schema)
     # key 1 evicted, FRESH ts above watermark -> re-emits
     b2 = spark.createDataFrame([ev(1, 138)], schema)
-    out, progress = replay_in_batches(
+    out, progress = replay(
         spark, [b0, b1, b2],
         lambda s: streaming_dedup(s, "30 minutes"), "dedup_boundaries",
     )
@@ -266,7 +266,7 @@ def test_stream_upsert_preserves_null_source_rows(spark, sf_dir, tmp_path):
     assert {"keep-null", "keep-other", "e1"} <= kept
 
 
-def test_replay_in_batches_late_drops(spark, sf_dir):
+def test_replay_late_drops(spark, sf_dir):
     """Stragglers arriving after their windows were evicted are dropped (the
     engine reports them in numRowsDroppedByWatermark); rows landing in
     still-live windows merge regardless of the watermark."""
@@ -276,7 +276,7 @@ def test_replay_in_batches_late_drops(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from srm_etl_spark.sources.tables import load_table
-    from srm_etl_spark.streaming.events import replay_in_batches
+    from srm_etl_spark.streaming.events import replay
 
     ev = load_table(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
     mm = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
@@ -293,7 +293,7 @@ def test_replay_in_batches_late_drops(spark, sf_dir):
             .select(F.col("w.start").alias("ws"), "n")
         )
 
-    out, progress = replay_in_batches(
+    out, progress = replay(
         spark,
         [
             ev.filter((F.col("ts") <= F.lit(cut1)) & ~strag),
@@ -337,8 +337,71 @@ def test_replay_in_batches_late_drops(spark, sf_dir):
     assert pred.exceptAll(out).count() == 0
 
 
+def _tiny_feed(spark):
+    """Two micro-batches of (k, ts) events, the second entirely later."""
+    import datetime
+
+    t0 = datetime.datetime(2026, 1, 1)
+
+    def rows(*pairs):
+        return spark.createDataFrame(
+            [(k, t0 + datetime.timedelta(minutes=m)) for k, m in pairs],
+            "k string, ts timestamp",
+        )
+
+    return [
+        rows(("a", 0), ("b", 5), ("a", 20), ("b", 70)),
+        rows(("a", 130), ("b", 140), ("a", 200)),
+    ]
+
+
+def _tiny_build(mode):
+    if mode == "append":  # finalized 1-hour windows need a watermark
+        return lambda s: (
+            s.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "k")
+            .count()
+            .select(F.col("w.start").alias("ws"), "k", "count")
+        )
+    return lambda s: s.groupBy("k").count()
+
+
+@pytest.mark.parametrize("mode", ["append", "complete", "update"])
+def test_replay_resumed_equals_uninterrupted(spark, mode):
+    """Every output mode's sink resumes exactly: killed after batch 1 and
+    restarted from the checkpoint, the replay returns the uninterrupted
+    run's rows, and each input row is processed once across the restart."""
+    from srm_etl_spark.streaming.events import replay
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    feed, build = _tiny_feed(spark), _tiny_build(mode)
+    plain, p_plain = replay(spark, feed, build, f"tiny_{mode}", mode=mode)
+    resumed, p_resumed = replay(
+        spark, feed, build, f"tiny_{mode}_rec", mode=mode, stop_after=1
+    )
+    assert rows(resumed) == rows(plain)
+    assert len(rows(plain)) > 0
+    for progress in (p_plain, p_resumed):
+        ids = [p.batchId for p in progress]
+        assert ids == sorted(set(ids))  # batch ids continue across the restart
+        assert sum(p.numInputRows for p in progress) == 7
+
+
+def test_replay_timeout_stops_the_query(spark):
+    """A replay that does not finish in time fails loudly and leaves no
+    query running."""
+    from srm_etl_spark.streaming.events import replay
+
+    with pytest.raises(RuntimeError, match="did not finish"):
+        replay(spark, _tiny_feed(spark), _tiny_build("complete"), "tiny_timeout",
+               mode="complete", timeout_sec=0)
+    assert spark.streams.active == []
+
+
 def test_checkpoint_recovery_matches_uninterrupted(spark, sf_dir):
-    """Kill-and-resume invariance (streaming/events.py:replay_with_recovery):
+    """Kill-and-resume invariance (streaming/events.py:replay, stop_after=2):
     q117's windowed late-drop replay and q157's watermarked dedup replay,
     stopped after batch 2 of 3 and restarted from the checkpoint, must emit
     exactly the uninterrupted runs' sets — watermark and operator state
